@@ -100,21 +100,9 @@ object Bench {
     // in JVM-static caches and survives the recycle, so per-query numbers
     // stay comparable with earlier rounds' cold/warm definitions.
     def newSession(): SparkSession = {
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.ansi.enabled", "false")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      // reliable checkpoint dir: iterative operators (near-dup clustering)
-      // take the cluster-durable path, and no localCheckpoint blocks (or
-      // their lineage-truncation unpersist warnings) accumulate mid-bench
-      spark.sparkContext.setCheckpointDir(Sessions.scratchCheckpointDir())
+      // Sessions.local's reliable checkpoint dir keeps localCheckpoint
+      // blocks (and their unpersist warnings) from accumulating mid-bench
+      val spark = Sessions.local(cpus)
       if (ioMetrics) spark.sparkContext.addSparkListener(metrics)
       // session warm-up: one tiny end-to-end job (scan, shuffle, agg)
       // absorbs class-loading / codegen / scheduler start-up costs.
@@ -236,7 +224,7 @@ object Bench {
     def timesJson(rs: Seq[R], f: R => Double): String =
       rs.map(r => "\"" + r.name + "\":" + f3(f(r))).mkString("{", ",", "}")
     val errs = failed
-      .map(r => "\"" + r.name + "\":\"" + r.err.getOrElse("").replaceAll("[\"\\\\\\n\\r\\t]", " ").take(120) + "\"")
+      .map(r => "\"" + r.name + "\":\"" + graft.pipeline.Tracking.esc(r.err.getOrElse("").take(120)) + "\"")
       .mkString("{", ",", "}")
     val total = ok.map(_.coldMin).sum
     val totalFirstCold = ok.map(_.cold).sum

@@ -20,7 +20,8 @@ object Sessions {
       // the reference's PySpark 3.x semantics (and our null guards) expect
       // null-on-zero-divide. Documented in DIVERGENCES.md.
       .config("spark.sql.ansi.enabled", "false")
-      // testdata events.parquet carries TIMESTAMP(NANOS) — read as long
+      // TIMESTAMP(NANOS) parquet columns read as long, which
+      // Tables.eventTime converts; TIMESTAMP(MICROS) files read natively
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // reclaim reliable-checkpoint files once their frame is unreachable
       // (iterative ops like Dedup.nearDupClusters checkpoint per iteration)
@@ -42,7 +43,7 @@ object Sessions {
     * (checkpoint files at RAM speed — in local mode durability against
     * executor loss is moot, the point is exercising the same code path a
     * cluster runs against HDFS), plain temp dir otherwise. */
-  private[graft] def scratchCheckpointDir(): String = {
+  private def scratchCheckpointDir(): String = {
     val shm = java.nio.file.Paths.get("/dev/shm")
     val base =
       if (java.nio.file.Files.isDirectory(shm) && java.nio.file.Files.isWritable(shm)) Some(shm)

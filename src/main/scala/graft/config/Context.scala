@@ -91,8 +91,10 @@ object Context {
   }
 
   /** Load config.yml + the catalog files it names (relative to its dir),
-    * merge, interpolate, build the session from core.spark_conf. */
-  def fromConfigFile(configPath: String, master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"): Context = {
+    * merge, interpolate, and build the session with `Sessions.local`, folding
+    * `core.app_name` and then `core.spark_conf` over its defaults — so a
+    * `spark.master` entry there overrides the local master. */
+  def fromConfigFile(configPath: String): Context = {
     val confDir = new java.io.File(configPath).getAbsoluteFile.getParent
     val base = loadYaml(configPath)
     def layer(name: String): Map[String, Any] =
@@ -109,16 +111,7 @@ object Context {
       .map(_.asInstanceOf[Map[String, Any]])
       .getOrElse(Map.empty)
       .map { case (k, v) => k -> v.toString }
-    val builder = SparkSession.builder()
-      .master(master)
-      .appName(dig(merged, "core.app_name").map(_.toString).getOrElse("graft"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    val spark = sparkConf.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Context(merged, spark)
+    val appName = dig(merged, "core.app_name").map(n => "spark.app.name" -> n.toString)
+    Context(merged, graft.Sessions.local(extra = appName.toMap ++ sparkConf))
   }
 }

@@ -1,7 +1,8 @@
 package graft.io
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, col, dense_rank, lag, lead, lit, max, raise_error, shiftleft, struct, when}
+import org.apache.spark.sql.functions.{broadcast, col, dense_rank, expr, lag, lead, lit, max, raise_error, shiftleft, struct, timestamp_micros, when}
+import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
 /** Format-dispatched readers/writers.
   *
@@ -38,6 +39,22 @@ object Tables {
       .options(options)
     reader.load(paths: _*)
   }
+
+  /** Normalize an events frame's `ts` column to a microsecond
+    * TimestampType. Event files have shipped with two physical types:
+    * TIMESTAMP(NANOS), which Spark only reads as a nano-count long (under
+    * spark.sql.legacy.parquet.nanosAsLong), and TIMESTAMP(MICROS) without a
+    * UTC flag, which Spark 4 reads as TIMESTAMP_NTZ. Both become one
+    * schema (the nano remainder is truncated, irrelevant at the second/day
+    * granularity downstream code uses); a native TIMESTAMP passes through. */
+  def eventTime(df: DataFrame): DataFrame =
+    df.schema("ts").dataType match {
+      case LongType => df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
+      // graft sessions pin spark.sql.session.timeZone=UTC, so the cast keeps
+      // the instant while restoring the type unix_micros etc. require
+      case TimestampNTZType => df.withColumn("ts", col("ts").cast(TimestampType))
+      case _ => df
+    }
 
   /** Overwrite-write a DataFrame as parquet (the reference always writes
     * parquet regardless of its `fmt` docstring). */

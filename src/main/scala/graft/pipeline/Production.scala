@@ -159,8 +159,7 @@ object Production {
         val cleaned = Cleaning.dropDuplicateRows(Cleaning.cleanColumns(df))
         save(ctx, cleaned, ctx.dataPath(s"clean.$name"))
       }
-      val ev = Tables.readData(s, Seq(ctx.dataPath("raw.events")))
-        .withColumn("ts", timestamp_micros(expr("ts div 1000")))
+      val ev = Tables.eventTime(Tables.readData(s, Seq(ctx.dataPath("raw.events"))))
       save(ctx,
         Cleaning.dropDuplicateRows(Cleaning.cleanColumns(ev)),
         ctx.dataPath("clean.events"))

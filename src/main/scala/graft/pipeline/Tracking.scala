@@ -20,7 +20,9 @@ object Tracking {
       params: Map[String, Any],
       error: Option[String] = None)
 
-  private def esc(s: String): String =
+  /** JSON string-body escape: quote, backslash, and every control char
+    * below 0x20. Bench and Verify use it for their JSON output too. */
+  private[graft] def esc(s: String): String =
     s.flatMap {
       case '"' => "\\\""
       case '\\' => "\\\\"

@@ -29,26 +29,10 @@ object Support {
   def t(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
 
-  /** events.parquet has shipped with two physical types for `ts`:
-    * TIMESTAMP(NANOS) — which Spark only reads as a nano-count long under
-    * spark.sql.legacy.parquet.nanosAsLong — and plain TIMESTAMP(MICROS),
-    * which reads natively. Normalize both to a microsecond TimestampType
-    * column so every downstream query sees one schema (truncation of the
-    * nano remainder is irrelevant at the second/day granularity our queries
-    * use). */
-  def events(s: SparkSession, dir: String): DataFrame = {
-    val raw = t(s, dir, "events")
-    raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        // Spark 4 infers NTZ for tz-less parquet timestamps; our sessions
-        // pin spark.sql.session.timeZone=UTC, so the cast keeps the instant
-        // while restoring the TIMESTAMP type that unix_micros etc. require.
-        raw.withColumn("ts", col("ts").cast(org.apache.spark.sql.types.TimestampType))
-      case _ => raw // already a native TIMESTAMP
-    }
-  }
+  /** The events table with `ts` as a microsecond TimestampType, whatever
+    * its physical parquet type (see `Tables.eventTime`). */
+  def events(s: SparkSession, dir: String): DataFrame =
+    graft.io.Tables.eventTime(t(s, dir, "events"))
 
   /** Exact decimal(18,2) view of a price-like double column. */
   def dec2(c: Column): Column = c.cast("decimal(18,2)")

@@ -208,19 +208,6 @@ object Streaming {
       .drop(col(s"${key}_r"))
   }
 
-  /** File-source reader for the canonical event schema (parquet dir →
-    * stream), ready for the transforms above. The canonical events.parquet
-    * carries TIMESTAMP(NANOS), which graft sessions read as LONG
-    * (spark.sql.legacy.parquet.nanosAsLong) — this reader declares ts as
-    * BIGINT and converts to a microsecond timestamp exactly like the batch
-    * accessor (queries.Support.events); declaring ts TIMESTAMP here would
-    * fail on the canonical files. */
-  def readEventStream(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.readStream
-      .schema("user_id BIGINT, event_type STRING, ts BIGINT, value DOUBLE")
-      .parquet(path)
-      .withColumn("ts", timestamp_micros(expr("ts div 1000")))
-
   /** Continuously maintain a per-key aggregate state table from a stream:
     * each micro-batch is reduced to its partial state (one combinable
     * groupBy over the BATCH only) and folded into the parquet state

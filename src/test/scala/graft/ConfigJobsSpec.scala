@@ -34,7 +34,8 @@ class ConfigJobsSpec extends AnyFunSuite {
           "stages" -> List(Map(
             "name" -> "tstage",
             "tasks" -> List(
-              Map("name" -> "ok-task", "params" -> Map("alpha" -> 1, "mode" -> "fast")),
+              Map("name" -> "ok-task", "params" ->
+                Map("alpha" -> 1, "mode" -> "fast", "note" -> "say \"hi\"\tthen\u0001")),
               Map("name" -> "bad-task"))))))),
       "log_catalog" -> Map("tracking" -> Map("path" -> log)))
     val ctx = Context(cfg, null)
@@ -47,6 +48,31 @@ class ConfigJobsSpec extends AnyFunSuite {
     assert(lines.get(0).contains("\"status\":\"ok\"") && lines.get(0).contains("\"alpha\":1")
       && lines.get(0).contains("\"mode\":\"fast\""))
     assert(lines.get(1).contains("\"status\":\"failed\"") && lines.get(1).contains("boom"))
+    // a quote, a tab and a raw control char all survive as valid JSON
+    val parsed = new com.fasterxml.jackson.databind.ObjectMapper().readTree(lines.get(0))
+    assert(parsed.get("params").get("note").asText() == "say \"hi\"\tthen\u0001")
+  }
+
+  test("data-cleaning then feature-engineering run the shipped catalog on the testdata") {
+    val spark = SparkSpec.session
+    val work = java.nio.file.Files.createTempDirectory("graft-propensity").toString
+    // core.spark_conf is not applied: Context(cfg, spark) reuses the shared
+    // test session, where fromConfigFile would build one from the config
+    val dataCatalog = Context.loadYaml("conf/data_catalog/local.yml")
+    val cfg = Context.interpolate(Map(
+      "job_catalog" -> Context.loadYaml("conf/job_catalog/local.yml"),
+      "core" -> Context.loadYaml("conf/core/default.yml"),
+      "data_catalog" -> dataCatalog.updated("base",
+        Map("raw" -> "/root/testdata/sf0.001", "work" -> work))))
+    graft.pipeline.Production.registerAll()
+    val ctx = Context(cfg, spark)
+    val failures = Seq("data-cleaning", "feature-engineering").flatMap(graft.pipeline.Jobs.run(ctx, _))
+    assert(failures.isEmpty, failures.toString)
+    val features = spark.read.parquet(ctx.dataPath("processed.features"))
+    val expected = Seq("target_var", "c_acctbal", "last_click_date_diff", "total_click_value",
+      "last_view_date_diff", "total_view_value", "last_purchase_date_diff", "total_purchase_value")
+    assert(expected.forall(features.columns.contains), features.columns.mkString(","))
+    assert(features.count() > 0)
   }
 
   test("fail_fast job skips its remaining tasks after a failure") {
