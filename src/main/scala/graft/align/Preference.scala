@@ -616,11 +616,9 @@ object Preference {
     // driver-sized data and the iterations run as local arithmetic —
     // zero Spark jobs beyond the one groupBy above. The staged cache
     // makes the probe's scan reusable if the gate fails.
-    val probe =
-      if (localMaxPairs > 0) directed.limit(localMaxPairs + 1).collect()
-      else Array.empty[org.apache.spark.sql.Row]
-    if (localMaxPairs > 0 && probe.length <= localMaxPairs) {
-      val out = localBradleyTerry(spark, directed.schema, probe, iterations)
+    val probe = graft.LocalGate.probe(directed, localMaxPairs)
+    if (probe.isDefined) {
+      val out = localBradleyTerry(spark, directed, probe.get, iterations)
       staged.foreach(_.unpersist(false))
       return out
     }
@@ -706,7 +704,7 @@ object Preference {
     * (BigDecimal of the shortest decimal representation, HALF_UP). */
   private def localBradleyTerry(
       spark: org.apache.spark.sql.SparkSession,
-      directedSchema: org.apache.spark.sql.types.StructType,
+      directed: DataFrame,
       directedRows: Array[org.apache.spark.sql.Row],
       iterations: Int): DataFrame = {
     import scala.collection.mutable
@@ -750,10 +748,15 @@ object Preference {
     val rows: Seq[org.apache.spark.sql.Row] = items.indices.map { k =>
       org.apache.spark.sql.Row(items(k), r6(p(k)), wins(k), games(k))
     }
+    // the distributed path's output schema: item from the winner ∪ loser
+    // union (its nullability and metadata), strength nullable (the
+    // renormalizing division), the count columns coalesced non-null
+    val itemField = directed.select(col("__w").as("item"))
+      .unionByName(directed.select(col("__l").as("item"))).schema("item")
     val schema = org.apache.spark.sql.types.StructType(Seq(
-      directedSchema("__w").copy(name = "item"),
+      itemField,
       org.apache.spark.sql.types.StructField("strength",
-        org.apache.spark.sql.types.DoubleType, nullable = false),
+        org.apache.spark.sql.types.DoubleType, nullable = true),
       org.apache.spark.sql.types.StructField("n_wins",
         org.apache.spark.sql.types.LongType, nullable = false),
       org.apache.spark.sql.types.StructField("n_games",

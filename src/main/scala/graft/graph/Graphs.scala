@@ -36,6 +36,14 @@ object Graphs {
     * a convergence race; pass more iterations for tighter fixpoints
     * (error decays as d^t).
     *
+    * Small graphs (at most [[LocalPrMaxEdges]] distinct edges) run the
+    * same iterations on the driver. The two paths sum in different
+    * orders, so raw ranks can differ in the last ulp across the gate;
+    * they agree under the 6-decimal rounding callers apply (the registry
+    * `pagerank` query emits `round(rank, 6)`), up to ties at a rounding
+    * boundary. Ranks are not rounded here: compare or hash rounded
+    * output, never raw doubles.
+    *
     * Output: (id, rank). */
   def pageRank(
       edges: DataFrame,
@@ -91,14 +99,12 @@ object Graphs {
       .filter(col("src").isNotNull && col("dst").isNotNull)
       .distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val probe =
-      if (localMaxEdges > 0) eDistinct.limit(localMaxEdges + 1).collect()
-      else Array.empty[org.apache.spark.sql.Row]
-    if (localMaxEdges > 0 && probe.length <= localMaxEdges) {
+    val probe = graft.LocalGate.probe(eDistinct, localMaxEdges)
+    if (probe.isDefined) {
       val idField = eDistinct.select(col("src").as("id"))
         .unionByName(eDistinct.select(col("dst").as("id")))
         .schema("id")
-      val out = localPageRank(spark, idField, probe, iterations, damping)
+      val out = localPageRank(spark, idField, probe.get, iterations, damping)
       eDistinct.unpersist(false)
       return out
     }
@@ -192,10 +198,12 @@ object Graphs {
     }
     val rows: Seq[org.apache.spark.sql.Row] =
       ids.indices.map(k => org.apache.spark.sql.Row(ids(k), rank(k)))
+    // the distributed loop's schema: its rank update divides, so rank is
+    // nullable there
     val schema = org.apache.spark.sql.types.StructType(Seq(
       idField,
       org.apache.spark.sql.types.StructField("rank",
-        org.apache.spark.sql.types.DoubleType, nullable = false)))
+        org.apache.spark.sql.types.DoubleType, nullable = true)))
     spark.createDataFrame(
       scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava, schema)
   }

@@ -418,7 +418,19 @@ object Tables {
     * ksStatistic convention), so the rejection rides the rebuild's own
     * scan instead of costing an eager validation job (r21: the eager
     * `require(lateBatch.isEmpty)` was a full extra pass over dim +
-    * batch on every call). */
+    * batch on every call).
+    *
+    * Because the guard is in the plan, the rejection is lazy: it fires
+    * when the returned frame is materialized (written or collected in
+    * full), not when `applyScd2` is called, and it surfaces as a Spark
+    * execution error wrapping the `raise_error` message rather than an
+    * IllegalArgumentException. Consuming only part of the result can
+    * skip it: a filter on the key columns pushed below the guard, a
+    * `limit`, an action that never reads the guarded timestamp (a
+    * `count` may prune it), or a frame that is never executed does not
+    * check the rows it does not compute. Callers that need the whole
+    * batch validated must materialize the whole result (as the
+    * catalog's SCD2 stage does when it writes the dimension). */
   def applyScd2(
       dim: DataFrame,
       changes: DataFrame,

@@ -3,13 +3,17 @@ package graft.model
 import org.apache.spark.ml.classification.LogisticRegression
 import org.apache.spark.ml.evaluation.{BinaryClassificationEvaluator, RegressionEvaluator}
 import org.apache.spark.ml.feature.VectorAssembler
+import org.apache.spark.ml.graft.LocalLogistic
 import org.apache.spark.ml.linalg.Vector
-import org.apache.spark.ml.param.{BooleanParam, DoubleParam, FloatParam, IntParam, LongParam, Param}
+import org.apache.spark.ml.param.{BooleanParam, DoubleParam, FloatParam, IntParam, LongParam, Param, ParamMap}
 import org.apache.spark.ml.tuning.{CrossValidator, CrossValidatorModel, ParamGridBuilder}
 import org.apache.spark.ml.{Pipeline, PipelineModel}
 import org.apache.spark.ml.functions.vector_to_array
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.NumericType
+
+import graft.LocalGate
 
 /** Train / score / persist (reference: production/training.py:23-107,
   * scoring.py:21-123, utils.py:45-57 grid search, utils.py:212-222
@@ -22,18 +26,92 @@ import org.apache.spark.sql.functions._
   */
 object Training {
 
-  /** Assembler + estimator pipeline, fit on train. */
+  /** Assembler + estimator pipeline, fit on train. A binary
+    * `logistic_regression` fit on a driver-sized frame runs on the driver
+    * (see [[LocalFitMaxCells]]); everything else is `Pipeline.fit`. */
   def train(
       df: DataFrame,
       labelCol: String,
       featureCols: Seq[String],
-      modelName: String = "logistic_regression"): PipelineModel = {
-    val assembler = new VectorAssembler()
-      .setInputCols(featureCols.toArray)
-      .setOutputCol("features")
-      .setHandleInvalid("keep")
+      modelName: String = "logistic_regression"): PipelineModel =
+    trainImpl(df, labelCol, featureCols, modelName, LocalFitMaxCells)
+
+  /** Cell bound of the driver-local logistic-regression path shared by
+    * [[train]] and [[gridSearch]] (the [[graft.graph.Graphs]] /
+    * [[graft.align.Preference]] hybrid-gate precedent, one
+    * [[graft.LocalGate]] probe): when the assembled frame provably holds
+    * at most this many cells — rows × (features + 2) — every fit, the
+    * fold × grid search and its areaUnderROC evaluation run as driver
+    * arithmetic through [[org.apache.spark.ml.graft.LocalLogistic]], which
+    * replays spark.ml's own L-BFGS fit, instead of a Spark job per L-BFGS
+    * iteration, summarizer pass, metrics pass and fold scan. 2^20 cells
+    * is ~8 MB of doubles collected; the bound is the largest size timed
+    * (SCALE.md, ML / eval), never cores. A cross-validated search is
+    * further capped by its evaluator's `numBins` (see [[gridSearchImpl]]).
+    * Bigger frames, other estimators, L1/elastic-net, bounded, weighted
+    * or multinomial fits and non-binary labels take spark.ml's
+    * distributed path unchanged. */
+  private[graft] val LocalFitMaxCells: Int = 1 << 20
+
+  private[graft] def trainImpl(
+      df: DataFrame,
+      labelCol: String,
+      featureCols: Seq[String],
+      modelName: String,
+      localMaxCells: Int): PipelineModel = {
+    val assembler = assemblerOf(featureCols)
     val est = Registry.estimator(modelName, "features", labelCol)
-    new Pipeline().setStages(Array(assembler, est)).fit(df)
+    val pipeline = new Pipeline().setStages(Array(assembler, est))
+    val local = est match {
+      case lr: LogisticRegression if LocalLogistic.plainBinomial(lr) =>
+        val maxRows = localMaxCells / (featureCols.size + 2)
+        probeBinary(assembler.transform(df), labelCol, maxRows, localMaxCells, None).map { p =>
+          LocalLogistic.pipelineModel(pipeline, Array(assembler, LocalLogistic.fit(lr, p.labels, p.features)))
+        }
+      case _ => None
+    }
+    local.getOrElse(pipeline.fit(df))
+  }
+
+  private def assemblerOf(featureCols: Seq[String]): VectorAssembler =
+    new VectorAssembler()
+      .setInputCols(featureCols.toArray).setOutputCol("features").setHandleInvalid("keep")
+
+  /** Rows of the local logistic path in the source frame's order: labels,
+    * assembled features and, for a cross-validation, each row's fold-order
+    * key. */
+  private final case class Probed(labels: Array[Double], features: Array[Vector], keys: Array[String]) {
+    def at(idx: Array[Int]): (Array[Double], Array[Vector]) = (idx.map(labels), idx.map(features))
+  }
+
+  /** The bounded probe of the local logistic path: (label, features[,
+    * key]) of the assembled frame in one narrow `limit(maxRows + 1)` job,
+    * or None when it is over `maxRows` rows or `localMaxCells` cells or
+    * holds what spark.ml would reject or fit differently — a non-numeric
+    * or null label, a label outside {0, 1} or a single class, label
+    * metadata declaring other than two classes, a null, NaN or infinite
+    * feature. */
+  private def probeBinary(
+      assembled: DataFrame,
+      labelCol: String,
+      maxRows: Int,
+      localMaxCells: Int,
+      key: Option[Column]): Option[Probed] = {
+    val label = assembled.schema(labelCol)
+    if (!label.dataType.isInstanceOf[NumericType] || !LocalLogistic.binaryLabel(label)) return None
+    val cols = Seq(col(labelCol).cast("double"), col("features")) ++ key
+    LocalGate.probe(assembled.select(cols: _*), maxRows).flatMap { rows =>
+      val valid = rows.forall(r =>
+        !r.isNullAt(0) && (r.getDouble(0) == 0.0 || r.getDouble(0) == 1.0) &&
+          !r.isNullAt(1) && r.getAs[Vector](1).toArray.forall(java.lang.Double.isFinite))
+      // -0.0 reads as 0.0, as the fold window's normalized label does
+      val labels = rows.map(r => if (valid && r.getDouble(0) == 1.0) 1.0 else 0.0)
+      val features = rows.map(_.getAs[Vector](1))
+      val dim = features.headOption.map(_.size).getOrElse(0)
+      val fits = valid && labels.contains(0.0) && labels.contains(1.0) &&
+        features.forall(_.size == dim) && rows.length.toLong * (dim + 2) <= localMaxCells
+      Option.when(fits)(Probed(labels, features, if (key.isEmpty) Array.empty else rows.map(_.getString(2))))
+    }
   }
 
   def saveModel(model: PipelineModel, path: String): Unit =
@@ -87,11 +165,29 @@ object Training {
       featureCols: Seq[String],
       modelName: String,
       grid: Map[String, Seq[Any]],
-      numFolds: Int = 3): CrossValidatorModel = {
+      numFolds: Int = 3): CrossValidatorModel =
+    gridSearchImpl(df, labelCol, featureCols, modelName, grid, numFolds, LocalFitMaxCells)
+
+  /** [[gridSearch]] with its local bound as a parameter (0 forces the
+    * CrossValidator). A `logistic_regression` grid whose every point stays
+    * on the plain binomial L-BFGS path, over a binary label and a frame
+    * within `localMaxCells` cells and under `2 · numBins` rows (the
+    * evaluator's) per validation fold, runs every fold × grid-point fit,
+    * the areaUnderROC evaluations and the refit on the driver and returns the
+    * CrossValidatorModel `cv.fit` would: the same fold-averaged
+    * `avgMetrics` in grid order, the first maximum as best, and a
+    * `bestModel` of the same stages and params. */
+  private[graft] def gridSearchImpl(
+      df: DataFrame,
+      labelCol: String,
+      featureCols: Seq[String],
+      modelName: String,
+      grid: Map[String, Seq[Any]],
+      numFolds: Int,
+      localMaxCells: Int): CrossValidatorModel = {
     require(grid.nonEmpty && grid.values.forall(_.nonEmpty),
       "gridSearch needs a non-empty param_grid with non-empty value lists")
-    val assembler = new VectorAssembler()
-      .setInputCols(featureCols.toArray).setOutputCol("features").setHandleInvalid("keep")
+    val assembler = assemblerOf(featureCols)
     val est = Registry.estimator(modelName, "features", labelCol)
     val builder = new ParamGridBuilder()
     grid.toSeq.sortBy(_._1).foreach { case (name, values) =>
@@ -104,10 +200,12 @@ object Training {
     val evaluator =
       if (regression) new RegressionEvaluator().setLabelCol(labelCol)
       else new BinaryClassificationEvaluator().setLabelCol(labelCol)
+    val pipeline = new Pipeline().setStages(Array(assembler, est))
+    val paramMaps = builder.build()
     val cv = new CrossValidator()
-      .setEstimator(new Pipeline().setStages(Array(assembler, est)))
+      .setEstimator(pipeline)
       .setEvaluator(evaluator)
-      .setEstimatorParamMaps(builder.build())
+      .setEstimatorParamMaps(paramMaps)
       .setNumFolds(numFolds)
       .setParallelism(4)
       .setSeed(0L)
@@ -122,11 +220,71 @@ object Training {
     else {
       import org.apache.spark.sql.expressions.Window
       val order = md5(concat_ws("\u0000", df.columns.map(c => col(c).cast("string")): _*))
-      val w = Window.partitionBy(col(labelCol)).orderBy(order)
-      val folded = df.withColumn("__fold",
-        ((row_number().over(w) - lit(1)) % numFolds).cast("int"))
-      cv.setFoldCol("__fold").fit(folded)
+      cv.setFoldCol("__fold")
+      val local = (est, evaluator) match {
+        case (lr: LogisticRegression, auc: BinaryClassificationEvaluator)
+            if paramMaps.forall(pm => LocalLogistic.plainBinomial(lr.copy(pm))) =>
+          // the probe stays narrow (md5 is a projection): a frame over the
+          // bound costs one early-stopping scan, never the window's shuffle
+          val numBins = auc.getNumBins
+          val maxRows = math.min(localMaxCells / (featureCols.size + 2),
+            if (numBins > 0) 2L * numBins * numFolds else Long.MaxValue).toInt
+          probeBinary(assembler.transform(df), labelCol, maxRows, localMaxCells, Some(order))
+            .flatMap(localCrossValidate(_, lr, assembler, pipeline, cv, paramMaps, numFolds, numBins))
+        case _ => None
+      }
+      local.getOrElse {
+        val w = Window.partitionBy(col(labelCol)).orderBy(order)
+        cv.fit(df.withColumn("__fold", ((row_number().over(w) - lit(1)) % numFolds).cast("int")))
+      }
     }
+  }
+
+  /** CrossValidator.fit over probed rows. The `__fold` window is replayed:
+    * per label, rows in key order (source order among equal keys, as the
+    * window's stable sort reads one coalesced partition), row number mod
+    * `numFolds`. Fold fits read that order and the refit the source
+    * order, as spark.ml's do (column pruning drops the window from the
+    * refit). Per fold, every grid point is fit on the other folds and
+    * scored by areaUnderROC on this one; metrics average over folds; the
+    * first best point is refit on every row. None when a fold would leave
+    * spark.ml an empty or one-class split (its own error or one-class
+    * model stays the answer), or when a validation fold has `2 · numBins`
+    * rows or more: there BinaryClassificationMetrics down-samples its
+    * curve per range partition, which the local AUC does not replay. */
+  private def localCrossValidate(
+      p: Probed,
+      lr: LogisticRegression,
+      assembler: VectorAssembler,
+      pipeline: Pipeline,
+      cv: CrossValidator,
+      paramMaps: Array[ParamMap],
+      numFolds: Int,
+      numBins: Int): Option[CrossValidatorModel] = {
+    val windowOrder = p.labels.indices.sortBy(i => (p.labels(i) == 1.0, p.keys(i))).toArray
+    val firstPositive = windowOrder.indexWhere(p.labels(_) == 1.0)
+    val folds = new Array[Int](windowOrder.length)
+    windowOrder.indices.foreach { k =>
+      folds(windowOrder(k)) = (if (k < firstPositive) k else k - firstPositive) % numFolds
+    }
+    val splits = (0 until numFolds).map(f => windowOrder.partition(folds(_) != f))
+    def bothClasses(idx: Array[Int]) =
+      idx.exists(p.labels(_) == 0.0) && idx.exists(p.labels(_) == 1.0)
+    if (!splits.forall { case (train, valid) =>
+          bothClasses(train) && valid.nonEmpty && (numBins == 0 || valid.length < 2 * numBins)
+        }) return None
+    val avgMetrics = splits.map { case (train, valid) =>
+      val (trainLabels, trainFeatures) = p.at(train)
+      val (validLabels, validFeatures) = p.at(valid)
+      paramMaps.map { pm =>
+        val model = LocalLogistic.fit(lr.copy(pm), trainLabels, trainFeatures)
+        LocalLogistic.areaUnderRoc(model, validLabels, validFeatures)
+      }
+    }.transpose.map(_.sum / numFolds).toArray
+    val best = paramMaps(avgMetrics.zipWithIndex.maxBy(_._1)._2)
+    val bestModel = LocalLogistic.pipelineModel(pipeline.copy(best),
+      Array(assembler.copy(best), LocalLogistic.fit(lr.copy(best), p.labels, p.features)))
+    Some(LocalLogistic.crossValidatorModel(cv, bestModel, avgMetrics))
   }
 
   /** YAML/config scalars → the param's declared type (unparseable value =
@@ -148,8 +306,7 @@ object Training {
       labelCol: String,
       featureCols: Seq[String],
       regParam: Double = 0.1): Seq[String] = {
-    val assembler = new VectorAssembler()
-      .setInputCols(featureCols.toArray).setOutputCol("features").setHandleInvalid("keep")
+    val assembler = assemblerOf(featureCols)
     val lr = new LogisticRegression()
       .setFeaturesCol("features").setLabelCol(labelCol)
       .setElasticNetParam(1.0).setRegParam(regParam)
@@ -167,8 +324,7 @@ object Training {
       numTrees: Int = 3,
       maxDepth: Int = 2): DataFrame = {
     import org.apache.spark.ml.classification.RandomForestClassifier
-    val assembler = new VectorAssembler()
-      .setInputCols(featureCols.toArray).setOutputCol("features").setHandleInvalid("keep")
+    val assembler = assemblerOf(featureCols)
     val rf = new RandomForestClassifier()
       .setFeaturesCol("features").setLabelCol(labelCol)
       .setNumTrees(numTrees).setMaxDepth(maxDepth).setSeed(0L)

@@ -791,13 +791,11 @@ object Similarity {
         if (dims <= 0) 0
         else math.min(LocalFitMaxPoints.toLong,
           LocalFitMaxOps / (math.max(1, cells).toLong * dims * 8)).toInt
-      val probe =
-        if (maxLocalPts >= math.max(cells, 2))
-          sampled(math.min(fitSample, maxLocalPts + 1)).collect()
-        else Array.empty[org.apache.spark.sql.Row]
-      if (probe.nonEmpty && probe.length <= maxLocalPts &&
-          probe.length >= cells && fitSample > 0) {
-        val pts = probe
+      val probe = graft.LocalGate
+        .probe(sampled(fitSample), if (maxLocalPts >= math.max(cells, 2)) maxLocalPts else 0)
+        .filter(rows => rows.nonEmpty && rows.length >= cells && fitSample > 0)
+      if (probe.isDefined) {
+        val pts = probe.get
           .map(_.getAs[org.apache.spark.ml.linalg.Vector]("__mlvec").toArray)
         LocalQuantizer(localLloyd(pts, cells, iters = 8))
       } else

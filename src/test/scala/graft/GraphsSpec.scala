@@ -62,11 +62,13 @@ class GraphsSpec extends SparkSpec {
       // is agreement under the 6-decimal rounding every caller applies
       assert(math.abs(l._2 - d._2) < 1e-9, s"rank at ${l._1}: ${l._2} vs ${d._2}")
     }
-    // schema parity: same names and types in the same order
-    val lf = Graphs.pageRankImpl(g, "s", "d", 1, 0.85, Graphs.LocalPrMaxEdges)
-    val df = Graphs.pageRankImpl(g, "s", "d", 1, 0.85, 0)
-    assert(lf.schema.fields.map(f => (f.name, f.dataType)).toSeq ===
-      df.schema.fields.map(f => (f.name, f.dataType)).toSeq)
+    // schema parity: the full StructType — names, types, nullability and
+    // metadata (the id column carries metadata through the src ∪ dst union)
+    val meta = new org.apache.spark.sql.types.MetadataBuilder().putString("src", "hosts").build()
+    val tagged = g.withColumn("s", $"s".as("s", meta))
+    val lf = Graphs.pageRankImpl(tagged, "s", "d", 1, 0.85, Graphs.LocalPrMaxEdges)
+    val df = Graphs.pageRankImpl(tagged, "s", "d", 1, 0.85, 0)
+    assert(lf.schema === df.schema, s"${lf.schema.treeString} vs ${df.schema.treeString}")
     // mass conservation on the local path
     assert(math.abs(local.map(_._2).sum - 1.0) < 1e-9)
   }

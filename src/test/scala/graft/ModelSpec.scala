@@ -144,4 +144,153 @@ class ModelSpec extends SparkSpec {
       "logistic_regression", Map("regParam" -> Seq(0.0, 0.1)), numFolds = 2)
     assert(cv.avgMetrics.nonEmpty && cv.bestModel != null)
   }
+
+  // ---- driver-local logistic path ≡ spark.ml (CrossValidator / Pipeline.fit)
+
+  import org.apache.spark.ml.PipelineModel
+  import org.apache.spark.ml.classification.LogisticRegressionModel
+  import org.apache.spark.ml.tuning.CrossValidatorModel
+
+  /** Seeded learnable frame: `n` rows of gaussian features, label from a
+    * noisy linear score, optionally with a constant column. */
+  private def seeded(seed: Int, n: Int, constant: Boolean = false) = {
+    val rnd = new scala.util.Random(seed)
+    (0 until n).map { i =>
+      val (a, b, c) = (rnd.nextGaussian(), rnd.nextGaussian() * 3.0, rnd.nextGaussian() + 2.0)
+      val y = if (1.2 * a - 0.4 * b + 0.3 * c + rnd.nextGaussian() > 0.6) 1.0 else 0.0
+      (i.toLong, a, b, c, if (constant) 3.0 else rnd.nextGaussian(), y)
+    }.toDF("id", "x1", "x2", "x3", "x4", "label")
+  }
+
+  private def lrStage(m: PipelineModel) = m.stages(1).asInstanceOf[LogisticRegressionModel]
+
+  /** Stage classes and explicitly set params of a fitted pipeline (uids
+    * are fresh per estimator, so params compare by name). */
+  private def stageParams(m: PipelineModel) = m.stages.toSeq.map { st =>
+    (st.getClass, st.params.filter(st.isSet).map { p =>
+      p.name -> (st.getOrDefault(p) match {
+        case a: Array[_] => a.toSeq
+        case v           => v
+      })
+    }.toMap)
+  }
+
+  private def scoresOf(m: PipelineModel, df: org.apache.spark.sql.DataFrame) =
+    Training.score(m, df).orderBy("id").select("score").as[Double].collect().toSeq
+
+  private def relClose(a: Double, b: Double) =
+    a == b || math.abs(a - b) <= 1e-9 * math.max(math.abs(a), math.abs(b))
+
+  /** Local vs CrossValidator on one input: the same best point, metrics,
+    * stages and params, coefficients (bit-identical when `onePartition`),
+    * and scores after a save → load round trip. */
+  private def assertCvParity(df: org.apache.spark.sql.DataFrame, features: Seq[String],
+      grid: Map[String, Seq[Any]], folds: Int, onePartition: Boolean): Unit = {
+    def run(bound: Int): CrossValidatorModel =
+      Training.gridSearchImpl(df, "label", features, "logistic_regression", grid, folds, bound)
+    val local = run(Training.LocalFitMaxCells)
+    val dist = run(0) // 0 forces the unchanged CrossValidator
+    val (lm, dm) = (local.bestModel.asInstanceOf[PipelineModel], dist.bestModel.asInstanceOf[PipelineModel])
+    // the local path ran (spark.ml's fit attaches a training summary)
+    assert(!lrStage(lm).hasSummary && lrStage(dm).hasSummary)
+    def bestOf(cv: CrossValidatorModel) =
+      cv.getEstimatorParamMaps(cv.avgMetrics.indexOf(cv.avgMetrics.max))
+        .toSeq.map(pp => pp.param.name -> pp.value).toMap
+    assert(bestOf(local) === bestOf(dist))
+    assert(local.avgMetrics.length === dist.avgMetrics.length)
+    local.avgMetrics.zip(dist.avgMetrics).foreach { case (a, b) =>
+      assert(math.abs(a - b) <= 1e-9, s"avgMetrics ${local.avgMetrics.toSeq} vs ${dist.avgMetrics.toSeq}")
+    }
+    assert(stageParams(lm) === stageParams(dm))
+    assert(local.getNumFolds === dist.getNumFolds && local.getFoldCol === dist.getFoldCol)
+    val (lc, dc) = (lrStage(lm).coefficients.toArray, lrStage(dm).coefficients.toArray)
+    val (li, di) = (lrStage(lm).intercept, lrStage(dm).intercept)
+    if (onePartition) {
+      assert(lc.toSeq === dc.toSeq && li === di, s"$lc/$li vs $dc/$di")
+      assert(lrStage(lm).coefficientMatrix === lrStage(dm).coefficientMatrix)
+    } else {
+      lc.zip(dc).foreach { case (a, b) => assert(relClose(a, b), s"${lc.toSeq} vs ${dc.toSeq}") }
+      assert(relClose(li, di), s"$li vs $di")
+    }
+    val dir = Files.createTempDirectory("graft-cv-parity").toString
+    Training.saveModel(lm, s"$dir/local")
+    Training.saveModel(dm, s"$dir/dist")
+    val (ls, ds) = (scoresOf(PipelineModel.load(s"$dir/local"), df), scoresOf(PipelineModel.load(s"$dir/dist"), df))
+    assert(ls === scoresOf(lm, df))
+    if (onePartition) assert(ls === ds)
+    else ls.zip(ds).foreach { case (a, b) => assert(relClose(a, b), s"score $a vs $b") }
+  }
+
+  test("local CV ≡ CrossValidator: multi-partition input, catalog grid") {
+    val df = seeded(7, 240).repartition(5)
+    assert(df.rdd.getNumPartitions === 5)
+    assertCvParity(df, Seq("x1", "x2", "x3", "x4"),
+      Map("regParam" -> Seq(0.0, 0.1), "elasticNetParam" -> Seq("0.0")), 2, onePartition = false)
+  }
+
+  test("local CV ≡ CrossValidator: rare class (2 of 42 rows), catalog grid, bit-identical") {
+    val rare = ((1 to 40).map(i => (i.toLong, (i % 13).toDouble, (i % 5).toDouble, 0.0)) ++
+      Seq((41L, 20.0, 1.0, 1.0), (42L, 21.0, 4.0, 1.0))).toDF("id", "x1", "x2", "label").coalesce(1)
+    assertCvParity(rare, Seq("x1", "x2"), Map("regParam" -> Seq(0.0, 0.1)), 2, onePartition = true)
+  }
+
+  test("local CV ≡ CrossValidator: constant feature, 3-point grid, 3 folds, bit-identical") {
+    val df = seeded(11, 300, constant = true).coalesce(1)
+    assertCvParity(df, Seq("x1", "x2", "x3", "x4"),
+      Map("regParam" -> Seq(0.0, 0.01, 0.1)), 3, onePartition = true)
+    // spark.ml zeroes the constant column's coefficient; so does the replay
+    val cv = Training.gridSearch(df, "label", Seq("x1", "x2", "x3", "x4"),
+      "logistic_regression", Map("regParam" -> Seq(0.0, 0.01, 0.1)), 3)
+    assert(lrStage(cv.bestModel.asInstanceOf[PipelineModel]).coefficients(3) === 0.0)
+  }
+
+  test("local single fit ≡ Pipeline.fit: one and many partitions, degenerate 14/1 label") {
+    val many = seeded(3, 200).repartition(4)
+    val one = seeded(5, 150).coalesce(1)
+    val degenerate = ((1 to 14).map(i => (i.toLong, i.toDouble, 0.0)) :+ ((15L, 9.5, 1.0)))
+      .toDF("id", "x1", "label").coalesce(1)
+    Seq((many, Seq("x1", "x2", "x3", "x4"), false), (one, Seq("x1", "x2", "x3", "x4"), true),
+        (degenerate, Seq("x1"), true)).foreach { case (df, features, onePartition) =>
+      val lm = Training.trainImpl(df, "label", features, "logistic_regression", Training.LocalFitMaxCells)
+      val dm = Training.trainImpl(df, "label", features, "logistic_regression", 0)
+      assert(!lrStage(lm).hasSummary && lrStage(dm).hasSummary)
+      assert(stageParams(lm) === stageParams(dm))
+      val pairs = (lrStage(lm).coefficients.toArray :+ lrStage(lm).intercept)
+        .zip(lrStage(dm).coefficients.toArray :+ lrStage(dm).intercept)
+      if (onePartition) assert(pairs.forall { case (a, b) => a == b }, pairs.toSeq)
+      else assert(pairs.forall { case (a, b) => relClose(a, b) }, pairs.toSeq)
+    }
+  }
+
+  test("CV fall-through: random forest, elastic-net grid, an over-bound frame and a 2·numBins validation fold take the CrossValidator") {
+    val df = seeded(13, 120).coalesce(1)
+    // 4,000 rows over 2 stratified folds: validation folds of 2,000 rows,
+    // 2 · numBins of the default evaluator, where spark.ml down-samples
+    val wide = seeded(17, 4000).coalesce(1)
+    val features = Seq("x1", "x2", "x3")
+    val cases = Seq(
+      (df, "random_forest_classifier", Map[String, Seq[Any]]("numTrees" -> Seq(3)), Training.LocalFitMaxCells),
+      (df, "logistic_regression", Map[String, Seq[Any]]("elasticNetParam" -> Seq(0.5)), Training.LocalFitMaxCells),
+      // 120 rows × (3 features + 2) = 600 cells: one cell over a 599 bound
+      (df, "logistic_regression", Map[String, Seq[Any]]("regParam" -> Seq(0.1)), 599),
+      (wide, "logistic_regression", Map[String, Seq[Any]]("regParam" -> Seq(0.1)), Training.LocalFitMaxCells))
+    cases.foreach { case (in, model, grid, bound) =>
+      val gated = Training.gridSearchImpl(in, "label", features, model, grid, 2, bound)
+      val forced = Training.gridSearchImpl(in, "label", features, model, grid, 2, 0)
+      assert(gated.avgMetrics.toSeq === forced.avgMetrics.toSeq, model)
+      val (gm, fm) = (gated.bestModel.asInstanceOf[PipelineModel], forced.bestModel.asInstanceOf[PipelineModel])
+      assert(stageParams(gm) === stageParams(fm))
+      assert(scoresOf(gm, in) === scoresOf(fm, in))
+      gm.stages(1) match {
+        case m: LogisticRegressionModel => assert(m.hasSummary, s"$model $grid took the local path")
+        case m                          => assert(m.getClass.getSimpleName === "RandomForestClassificationModel")
+      }
+    }
+    // one cell more of bound, or two rows fewer, and the same grid runs locally
+    def runsLocally(in: org.apache.spark.sql.DataFrame, bound: Int) =
+      !lrStage(Training.gridSearchImpl(in, "label", features, "logistic_regression",
+        Map("regParam" -> Seq(0.1)), 2, bound).bestModel.asInstanceOf[PipelineModel]).hasSummary
+    assert(runsLocally(df, 600))
+    assert(runsLocally(seeded(17, 3996).coalesce(1), Training.LocalFitMaxCells))
+  }
 }

@@ -125,12 +125,17 @@ class PreferenceSpec extends SparkSpec {
     local.zip(dist).foreach { case (l, d) =>
       assert(l._2 === d._2, s"strength mismatch at ${l._1}: ${l._2} vs ${d._2}")
     }
-    // schema parity: same names and types in the same order
-    val lf = Preference.bradleyTerryImpl(log, "winner", "loser", 1,
+    // schema parity: the full StructType — names, types, nullability and
+    // metadata — with item drawn from a nullable loser column and a
+    // metadata-carrying winner column, so the winner ∪ loser union shows
+    val meta = new org.apache.spark.sql.types.MetadataBuilder().putString("src", "arena").build()
+    val tagged = log.withColumn("winner", $"winner".as("winner", meta))
+      .withColumn("loser", when($"loser" =!= "zz", $"loser"))
+    val lf = Preference.bradleyTerryImpl(tagged, "winner", "loser", 1,
       Preference.LocalBtMaxDirectedPairs)
-    val df = Preference.bradleyTerryImpl(log, "winner", "loser", 1, 0)
-    assert(lf.schema.fields.map(f => (f.name, f.dataType)).toSeq ===
-      df.schema.fields.map(f => (f.name, f.dataType)).toSeq)
+    val df = Preference.bradleyTerryImpl(tagged, "winner", "loser", 1, 0)
+    assert(lf.schema === df.schema, s"${lf.schema.treeString} vs ${df.schema.treeString}")
+    assert(lf.schema("item").nullable && lf.schema("item").metadata == meta)
   }
 
   test("groupAdvantages: within-group standardization, degenerate groups at 0") {
