@@ -11,9 +11,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * The built-in route — `aggregate(zip_with(a, b, _*_), 0d, _+_)` — runs as
   * interpreted HigherOrderFunction lambdas (~µs per ELEMENT); for similarity
   * search that put vector math at 100+ seconds for a 5k×5 corpus×query scan.
-  * This expression is a tight generated loop over the ArrayData (whole-stage
-  * codegen), ~1000× cheaper, and the building block for cosine similarity
-  * and random-hyperplane LSH projections (dot against a literal plane).
+  * This expression is a tight loop over the ArrayData ([[ArrayDot.dot]],
+  * called from whole-stage codegen), ~1000× cheaper, and the building block
+  * for cosine similarity and random-hyperplane LSH projections (dot against
+  * a literal plane).
   *
   * Shorter input decides the iteration count; null arrays yield null
   * (BinaryExpression's default null-intolerant contract). Null elements are
@@ -35,9 +36,22 @@ case class ArrayDot(left: Expression, right: Expression) extends BinaryExpressio
 
   override def prettyName: String = "graft_array_dot"
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    ArrayDot.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => s"graft.expressions.ArrayDot.dot($a, $b)")
+
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): ArrayDot =
+    copy(left = newLeft, right = newRight)
+}
+
+object ArrayDot {
+
+  /** The kernel: the generated code calls it, and so does every driver-side
+    * replay of a plan that scores with this expression, so both sum in the
+    * same order. */
+  def dot(x: ArrayData, y: ArrayData): Double = {
     val n = math.min(x.numElements(), y.numElements())
     var s = 0.0
     var i = 0
@@ -47,24 +61,4 @@ case class ArrayDot(left: Expression, right: Expression) extends BinaryExpressio
     }
     s
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val s = ctx.freshName("s")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$a.isNullAt($i) && !$b.isNullAt($i)) {
-         |    $s += $a.getDouble($i) * $b.getDouble($i);
-         |  }
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): ArrayDot =
-    copy(left = newLeft, right = newRight)
 }

@@ -168,6 +168,23 @@ object Training {
       numFolds: Int = 3): CrossValidatorModel =
     gridSearchImpl(df, labelCol, featureCols, modelName, grid, numFolds, LocalFitMaxCells)
 
+  /** [[gridSearch]]'s best model when every label class has at least 2
+    * rows — stratified folds then hand every training fold every class —
+    * else one [[train]] fit, announced on stderr: a tiny or degenerate
+    * label (14/1 at sf0.001) degrades loudly instead of failing. A search
+    * that runs on the driver counts the classes in the rows its probe
+    * already holds; only one that falls through runs a class-count
+    * aggregate first. */
+  def gridSearchOrTrain(
+      df: DataFrame,
+      labelCol: String,
+      featureCols: Seq[String],
+      modelName: String,
+      grid: Map[String, Seq[Any]],
+      numFolds: Int = 3): PipelineModel =
+    crossValidate(df, labelCol, featureCols, modelName, grid, numFolds, LocalFitMaxCells,
+      rareClassFit = true).fold(identity, _.bestModel.asInstanceOf[PipelineModel])
+
   /** [[gridSearch]] with its local bound as a parameter (0 forces the
     * CrossValidator). A `logistic_regression` grid whose every point stays
     * on the plain binomial L-BFGS path, over a binary label and a frame
@@ -184,7 +201,21 @@ object Training {
       modelName: String,
       grid: Map[String, Seq[Any]],
       numFolds: Int,
-      localMaxCells: Int): CrossValidatorModel = {
+      localMaxCells: Int): CrossValidatorModel =
+    crossValidate(df, labelCol, featureCols, modelName, grid, numFolds, localMaxCells,
+      rareClassFit = false).toOption.get
+
+  /** The search behind [[gridSearchImpl]]; with `rareClassFit`, a label
+    * class under 2 rows makes it Left(one [[trainImpl]] fit) instead. */
+  private def crossValidate(
+      df: DataFrame,
+      labelCol: String,
+      featureCols: Seq[String],
+      modelName: String,
+      grid: Map[String, Seq[Any]],
+      numFolds: Int,
+      localMaxCells: Int,
+      rareClassFit: Boolean): Either[PipelineModel, CrossValidatorModel] = {
     require(grid.nonEmpty && grid.values.forall(_.nonEmpty),
       "gridSearch needs a non-empty param_grid with non-empty value lists")
     val assembler = assemblerOf(featureCols)
@@ -216,8 +247,21 @@ object Training {
     // proportional share of each class — every training fold sees every
     // class whenever each class has >= 2 examples. The window partitions
     // by label (bounded cardinality for classification), not globally.
-    if (regression) cv.fit(df)
-    else {
+    def rareClass(counts: Iterable[Long]) =
+      rareClassFit && (counts.size < 2 || counts.min < 2)
+    def singleFit(fit: => PipelineModel): Left[PipelineModel, Nothing] = {
+      System.err.println(
+        "[graft] gridSearch: a label class has < 2 examples — CV infeasible, single fit")
+      Left(fit)
+    }
+    // the fall-through's class count: one aggregate, run only when asked
+    def rareInFrame = rareClassFit &&
+      rareClass(df.groupBy(col(labelCol)).count().limit(1000).collect().map(_.getLong(1)))
+    def trainFit = singleFit(trainImpl(df, labelCol, featureCols, modelName, localMaxCells))
+    if (regression) {
+      if (rareInFrame) trainFit
+      else Right(cv.fit(df))
+    } else {
       import org.apache.spark.sql.expressions.Window
       val order = md5(concat_ws("\u0000", df.columns.map(c => col(c).cast("string")): _*))
       cv.setFoldCol("__fold")
@@ -230,12 +274,23 @@ object Training {
           val maxRows = math.min(localMaxCells / (featureCols.size + 2),
             if (numBins > 0) 2L * numBins * numFolds else Long.MaxValue).toInt
           probeBinary(assembler.transform(df), labelCol, maxRows, localMaxCells, Some(order))
-            .flatMap(localCrossValidate(_, lr, assembler, pipeline, cv, paramMaps, numFolds, numBins))
+            .flatMap { p =>
+              // train's local fit (the registry's estimator is plain
+              // binomial), from the rows already held
+              if (rareClass(p.labels.groupBy(identity).values.map(_.length.toLong)))
+                Some(singleFit(LocalLogistic.pipelineModel(pipeline,
+                  Array(assembler, LocalLogistic.fit(lr, p.labels, p.features)))))
+              else localCrossValidate(p, lr, assembler, pipeline, cv, paramMaps, numFolds, numBins)
+                .map(Right(_))
+            }
         case _ => None
       }
       local.getOrElse {
-        val w = Window.partitionBy(col(labelCol)).orderBy(order)
-        cv.fit(df.withColumn("__fold", ((row_number().over(w) - lit(1)) % numFolds).cast("int")))
+        if (rareInFrame) trainFit
+        else {
+          val w = Window.partitionBy(col(labelCol)).orderBy(order)
+          Right(cv.fit(df.withColumn("__fold", ((row_number().over(w) - lit(1)) % numFolds).cast("int"))))
+        }
       }
     }
   }

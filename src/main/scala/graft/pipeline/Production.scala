@@ -194,32 +194,17 @@ object Production {
       // a `param_grid: {regParam: [0.0, 0.1], ...}` task param selects the
       // best model by cross-validation over the declared grid (the
       // reference's intended-but-broken config grid, utils.py:45-57);
-      // without one, a single fit
-      // CV needs every class in every TRAINING fold — stratified folds
-      // (Training.gridSearch) guarantee that iff each class has >= 2
-      // examples. A tiny/degenerate label (as at sf0.001: 14/1) degrades
-      // to a single fit LOUDLY instead of failing the job.
-      def cvFeasible: Boolean = {
-        val counts = df.groupBy(col("target_var")).count()
-          .limit(1000).collect().map(_.getLong(1))
-        counts.length >= 2 && counts.min >= 2
-      }
+      // without one, a single fit. A label class under 2 examples (as at
+      // sf0.001: 14/1) makes CV infeasible: gridSearchOrTrain degrades to
+      // a single fit LOUDLY instead of failing the job.
       val model = params.get("param_grid") match {
         case Some(g: Map[_, _]) if g.nonEmpty =>
-          if (cvFeasible) {
-            val grid = g.asInstanceOf[Map[String, Any]].map {
-              case (k, vs: List[_]) => k -> vs.toSeq
-              case (k, v)           => k -> Seq(v)
-            }
-            val folds = params.getOrElse("num_folds", "3").toString.toInt
-            Training.gridSearch(df, "target_var", featureCols, modelName, grid, folds)
-              .bestModel.asInstanceOf[org.apache.spark.ml.PipelineModel]
-          } else {
-            // degenerate LABEL, not a config problem: degrade loudly
-            System.err.println(
-              "[graft] model-gen: param_grid declared but a label class has < 2 examples — CV infeasible, single fit")
-            Training.train(df, "target_var", featureCols, modelName)
+          val grid = g.asInstanceOf[Map[String, Any]].map {
+            case (k, vs: List[_]) => k -> vs.toSeq
+            case (k, v)           => k -> Seq(v)
           }
+          val folds = params.getOrElse("num_folds", "3").toString.toInt
+          Training.gridSearchOrTrain(df, "target_var", featureCols, modelName, grid, folds)
         case Some(bad) =>
           // a config typo (list, scalar, empty map) must be a loud error,
           // not a silently absorbed single fit

@@ -91,7 +91,7 @@ object LlmQueries {
     * the data directory so sf0.01 (Verify) and sf0.1 (Bench) never share an
     * index. Lives in the JVM temp dir — the index is a derived artifact,
     * rebuilt from the data whenever absent. */
-  private def annIndexDir(dir: String, kind: String): String = {
+  private[graft] def annIndexDir(dir: String, kind: String): String = {
     val key = java.security.MessageDigest.getInstance("MD5")
       .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
     s"${System.getProperty("java.io.tmpdir")}/graft_ann_${kind}_$key"

@@ -1,7 +1,8 @@
 package graft.similarity
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /** Persistable ANN index: build once, search many.
   *
@@ -46,6 +47,8 @@ import org.apache.spark.sql.functions._
   * the partitioned layout; periodic re-fit is a rebuild.
   */
 object AnnIndex {
+
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   private val MetaFile = "meta.parquet"
 
@@ -526,7 +529,26 @@ object AnnIndex {
     * Post-filter semantics: candidates still come from the probed cells
     * first, so a highly selective filter thins the pool — raise
     * `nprobe` (up to nlist for exact-within-filter) when the filter
-    * keeps only a small slice of each cell. */
+    * keeps only a small slice of each cell.
+    *
+    * Driver-sized searches run on the driver (SystemML's hybrid runtime,
+    * the [[graft.LocalGate]] contract): with no `corpusFilter`, over an
+    * unquantized index without pending tombstones, when the query frame
+    * passes one [[graft.LocalGate]] probe of [[LocalSearchMaxQueries]] rows
+    * and the centroid table plus the probed cells hold at most
+    * [[LocalSearchMaxBytes]] on-disk bytes summed over queries, the
+    * centroids and probed cell files are
+    * read with parquet-hadoop and the search is replayed by
+    * [[LocalIvf]] — the same rows and the same schema, returned as a
+    * local relation. At the 8 MB bound, on 4 vCPU over two sittings, the
+    * local route took 0.32–0.46 s against the plan's 0.43–0.74 s on a
+    * scoring-bound pool and 0.37–0.45 s against 0.38–0.55 s on a
+    * read-bound one (`graft.tools.GateBench ivf`, SCALE.md "IVF search
+    * gate"). That route is EAGER: the query frame, centroids and
+    * cells are read when this is called, not when the result is
+    * consumed, so an append landing in between is not seen. Every other
+    * search is the lazy distributed plan. The chosen route, probed
+    * cells, candidate rows and pool bytes are logged at INFO. */
   def searchIvf(
       spark: SparkSession,
       dir: String,
@@ -535,13 +557,90 @@ object AnnIndex {
       vecCol: String,
       k: Int,
       nprobe: Int = 0,
-      corpusFilter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
+      corpusFilter: Option[org.apache.spark.sql.Column] = None): DataFrame =
+    searchIvfImpl(spark, dir, queries, queryIdCol, vecCol, k, nprobe, corpusFilter,
+      LocalSearchMaxBytes)
+
+  /** On-disk bytes of the centroid table and the probed cells, summed
+    * over queries, up to which [[searchIvf]] runs on the driver: it reads,
+    * ranks and scores that pool
+    * single-threaded, where the plan pays file listing, schema inference
+    * and probe jobs first. The largest power of two at which the local
+    * route did not lose to the plan on a read-bound pool, the worst case
+    * (`graft.tools.GateBench ivf`; at 16 MB it lost). A bound on data
+    * size, never on cores. */
+  private[graft] val LocalSearchMaxBytes: Long = 8L << 20
+
+  /** Query rows [[searchIvf]]'s local route collects at most: the query
+    * frame is broadcast-sized by contract, and 4,096 rows of 1,536-dim
+    * doubles are 50 MB. */
+  private[graft] val LocalSearchMaxQueries: Int = 4096
+
+  /** [[searchIvf]] with its local bound as a parameter (0 forces the
+    * distributed plan and runs no probe). */
+  private[graft] def searchIvfImpl(
+      spark: SparkSession,
+      dir: String,
+      queries: DataFrame,
+      queryIdCol: String,
+      vecCol: String,
+      k: Int,
+      nprobe: Int,
+      corpusFilter: Option[org.apache.spark.sql.Column],
+      localMaxBytes: Long): DataFrame = {
+    lazy val probed = probeQueries(queries, queryIdCol, vecCol)
+    searchIvfRouted(spark, dir, queries, queryIdCol, vecCol, k, nprobe, corpusFilter,
+      localMaxBytes, probed).fold(identity, { case (schema, rows) => localFrame(spark, schema, rows) })
+  }
+
+  /** One IVF search, routed: Right(schema, rows) from the driver, or
+    * Left(the distributed plan). `probed` is the query frame's one
+    * [[graft.LocalGate]] probe, forced only when the route is still open. */
+  private def searchIvfRouted(
+      spark: SparkSession,
+      dir: String,
+      queries: DataFrame,
+      queryIdCol: String,
+      vecCol: String,
+      k: Int,
+      nprobe: Int,
+      corpusFilter: Option[org.apache.spark.sql.Column],
+      localMaxBytes: Long,
+      probed: => Option[Seq[LocalIvf.Query]])
+      : Either[DataFrame, (StructType, Seq[Row])] = {
     require(nprobe >= 0, s"nprobe must be >= 0 (0 = auto), got $nprobe")
     val m = readMeta(spark, dir, "ivf")
     val probes =
       if (nprobe > 0) nprobe else Similarity.ivfAutoNprobe(m.nlist, m.nRows, k)
     require(probes >= 1 && probes <= m.nlist,
       s"need 1 <= nprobe <= nlist, got nprobe=$probes nlist=${m.nlist}")
+    val open =
+      if (localMaxBytes <= 0) Left("bound 0")
+      else if (corpusFilter.isDefined) Left("corpus filter")
+      else if (m.quantized) Left("quantized")
+      else if (hasTombstones(spark, dir)) Left("pending tombstones")
+      else localSchema(spark, dir, m.idCol, queries, queryIdCol, vecCol)
+    val local = open.flatMap(schema =>
+      probed.toRight(s"query frame over $LocalSearchMaxQueries rows or ids not distinct")
+        .flatMap(qs => localSearch(spark, dir, schema(1), qs, probes, k, localMaxBytes))
+        .map(rows => (schema, rows)))
+    local.left.map { why =>
+      log.info(s"ivf search $dir: route=distributed ($why)")
+      distributedSearch(spark, dir, m, queries, queryIdCol, vecCol, k, probes, corpusFilter)
+    }
+  }
+
+  /** The distributed IVF search plan. */
+  private def distributedSearch(
+      spark: SparkSession,
+      dir: String,
+      m: Meta,
+      queries: DataFrame,
+      queryIdCol: String,
+      vecCol: String,
+      k: Int,
+      probes: Int,
+      corpusFilter: Option[org.apache.spark.sql.Column]): DataFrame = {
     val centDf = spark.read.parquet(s"$dir/centroids.parquet")
     // exhaustive operating point (nprobe = nlist — the exact-oracle
     // searches): every cell is probed by construction, so the probe
@@ -569,6 +668,123 @@ object AnnIndex {
     val alive = minusTombstones(spark, dir, m.idCol,
       corpusFilter.fold(pruned)(pruned.filter))
     Similarity.ivfScore(scoringForm(alive, m.quantized), qProbes, m.idCol, k)
+  }
+
+  private def localFrame(spark: SparkSession, schema: StructType, rows: Seq[Row]): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(rows.asJava, schema)
+  }
+
+  /** The probe frame of the local route: the (id, vector) rows of a query
+    * frame of at most [[LocalSearchMaxQueries]] rows, or None when it is
+    * bigger or two probe-frame queries share a non-null id (the plan's
+    * per-id windows would pool them). */
+  private def probeQueries(
+      queries: DataFrame, queryIdCol: String, vecCol: String): Option[Seq[LocalIvf.Query]] =
+    graft.LocalGate.probe(queries.select(col(queryIdCol), col(vecCol)), LocalSearchMaxQueries)
+      .map(LocalIvf.queries)
+      .filter { qs => val ids = qs.map(_.id).filter(_ != null); ids.distinct.size == ids.size }
+
+  /** `__cell=<n>` directories of a cell-partitioned corpus, by cell. */
+  private def cellDirs(
+      fs: org.apache.hadoop.fs.FileSystem, corpus: org.apache.hadoop.fs.Path)
+      : Seq[(Int, org.apache.hadoop.fs.Path)] =
+    fs.listStatus(corpus).toSeq.filter(_.isDirectory).flatMap { st =>
+      st.getPath.getName.stripPrefix("__cell=").toIntOption
+        .filter(_ => st.getPath.getName.startsWith("__cell=")).map(_ -> st.getPath)
+    }.sortBy(_._1)
+
+  /** The local route's output schema — the distributed plan's (query_id,
+    * id, cosine, rank), nullability and metadata included — from one
+    * stored footer and the query frame's schema, or Left(why not) when the
+    * route cannot replay this index: ids other than int, long or string
+    * on both sides, non-numeric vectors, or a corpus Spark did not write.
+    * Lossy id pairs fail here as the plan fails. No job runs. */
+  private def localSchema(
+      spark: SparkSession, dir: String, idCol: String,
+      queries: DataFrame, queryIdCol: String, vecCol: String)
+      : Either[String, StructType] = {
+    import org.apache.spark.sql.types._
+    val conf = spark.sparkContext.hadoopConfiguration
+    val corpus = new org.apache.hadoop.fs.Path(s"$dir/corpus.parquet")
+    val fs = corpus.getFileSystem(conf)
+    val stored = cellDirs(fs, corpus).iterator
+      .flatMap { case (_, d) => graft.io.DriverParquet.partFiles(fs, d) }
+      .nextOption()
+      .flatMap(f => graft.io.DriverParquet.sparkSchema(conf, f.getPath))
+    def numericArray(t: DataType) = t match {
+      case ArrayType(_: DecimalType, _) => false
+      case ArrayType(_: NumericType, _) => true
+      case _                            => false
+    }
+    def idFamily(t: DataType) = t match {
+      case IntegerType | LongType => Some("integral")
+      case StringType             => Some("string")
+      case _                      => None
+    }
+    val q = queries.schema(queryIdCol)
+    stored.filter(s => Set(idCol, "__cv", "__cn").subsetOf(s.fieldNames.toSet))
+      .toRight("no Spark schema in the stored corpus")
+      .flatMap { s =>
+        val id = s(idCol)
+        Similarity.requireComparableIdTypes(
+          id.dataType, s"index corpus id '$idCol' at $dir", q.dataType, s"query id '$queryIdCol'")
+        Either.cond(
+          idFamily(id.dataType).isDefined && idFamily(id.dataType) == idFamily(q.dataType) &&
+            numericArray(s("__cv").dataType) && s("__cn").dataType == DoubleType &&
+            numericArray(queries.schema(vecCol).dataType),
+          StructType(Seq(
+            StructField("query_id", q.dataType, q.nullable, q.metadata),
+            id.copy(nullable = true),
+            StructField("cosine", DoubleType, nullable = true),
+            StructField("rank", IntegerType, nullable = false))),
+          "id or vector types")
+      }
+  }
+
+  /** The local route's answer rows, or Left(why not) when its pool — the
+    * on-disk bytes each query scans, the centroid table it ranks plus its
+    * probed cells, summed over queries — exceeds `localMaxBytes`. The
+    * centroid share is checked before the centroids are read. */
+  private def localSearch(
+      spark: SparkSession, dir: String, idField: StructField,
+      qs: Seq[LocalIvf.Query], probes: Int, k: Int,
+      localMaxBytes: Long): Either[String, Seq[Row]] = {
+    import graft.io.DriverParquet
+    val idCol = idField.name
+    val conf = spark.sparkContext.hadoopConfiguration
+    val corpus = new org.apache.hadoop.fs.Path(s"$dir/corpus.parquet")
+    val fs = corpus.getFileSystem(conf)
+    val centFiles = DriverParquet.partFiles(fs, new org.apache.hadoop.fs.Path(s"$dir/centroids.parquet"))
+    val rankBytes = qs.size * centFiles.map(_.getLen).sum
+    if (rankBytes > localMaxBytes) return Left(s"$rankBytes centroid bytes > bound $localMaxBytes")
+    val cents = centFiles.flatMap(f =>
+      DriverParquet.readColumns(conf, f.getPath, Seq("__cell", "__cent")).map(r =>
+        (r(0).asInstanceOf[Int], LocalIvf.doubles(r(1)))))
+    val probedBy = qs.map(q => q -> LocalIvf.probedCells(q, cents, probes))
+    val dirs = cellDirs(fs, corpus).toMap
+    val files = probedBy.flatMap(_._2).distinct.map(c =>
+      c -> dirs.get(c).map(DriverParquet.partFiles(fs, _)).getOrElse(Nil)).toMap
+    val cellBytes = files.map { case (c, fsts) => c -> fsts.map(_.getLen).sum }
+    val poolBytes = rankBytes + probedBy.map(_._2.map(cellBytes).sum).sum
+    val cells = files.size
+    if (poolBytes > localMaxBytes)
+      Left(s"$cells probed cells, $poolBytes pool bytes > bound $localMaxBytes")
+    else {
+      val rows = files.map { case (c, fsts) =>
+        c -> fsts.flatMap(f => DriverParquet.readColumns(conf, f.getPath, Seq(idCol, "__cv", "__cn")).map(r =>
+          LocalIvf.Cand(r(0), LocalIvf.doubles(r(1)), r(2).asInstanceOf[java.lang.Double])))
+      }
+      val answer = probedBy.flatMap { case (q, qCells) =>
+        val scored = qCells.flatMap(rows).filter(c => LocalIvf.distinctIds(c.id, q.id))
+          .map(c => (c.id, LocalIvf.cosine(c, q)))
+        LocalIvf.topK(scored, k).map { case (id, cos, rank) => Row(q.id, id, cos, rank) }
+      }
+      val candidates = probedBy.map(_._2.map(rows(_).size).sum).sum
+      log.info(s"ivf search $dir: route=local ($cells probed cells, $candidates candidate rows, " +
+        s"$poolBytes pool bytes <= bound $localMaxBytes)")
+      Right(answer)
+    }
   }
 
   // --------------------------------------------------------------- IVF-PQ
@@ -1199,7 +1415,10 @@ object AnnIndex {
     * probe RESOLUTION (each shard's centroid ranking collects its
     * probed-cell set to push the partition-pruning literal) runs on S
     * concurrent threads — serially it was S driver round-trips of
-    * latency; the scoring itself is one unioned Spark job either way. */
+    * latency; the scoring itself is one unioned Spark job either way.
+    * Each shard takes [[searchIvf]]'s route on its own (the query frame is
+    * probed once for all of them); when every shard answers on the
+    * driver, the merge does too and the result is a local relation. */
   def searchIvfSharded(
       spark: SparkSession,
       dir: String,
@@ -1208,14 +1427,33 @@ object AnnIndex {
       vecCol: String,
       k: Int,
       nprobe: Int = 0,
-      corpusFilter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
+      corpusFilter: Option[org.apache.spark.sql.Column] = None): DataFrame =
+    searchIvfShardedImpl(spark, dir, queries, queryIdCol, vecCol, k, nprobe, corpusFilter,
+      LocalSearchMaxBytes)
+
+  /** [[searchIvfSharded]] with the per-shard local bound as a parameter. */
+  private[graft] def searchIvfShardedImpl(
+      spark: SparkSession,
+      dir: String,
+      queries: DataFrame,
+      queryIdCol: String,
+      vecCol: String,
+      k: Int,
+      nprobe: Int,
+      corpusFilter: Option[org.apache.spark.sql.Column],
+      localMaxBytes: Long): DataFrame = {
     val m = readMeta(spark, dir, "ivf_sharded")
-    mergeShardTopK(
-      fanOut(m.tables)(sh =>
-        searchIvf(spark, s"$dir/shard=$sh", queries, queryIdCol, vecCol, k,
-          shardNprobe(spark, s"$dir/shard=$sh", "ivf", k, nprobe, m.tables),
-          corpusFilter)),
+    lazy val probed = probeQueries(queries, queryIdCol, vecCol)
+    val routed = fanOut(m.tables)(sh =>
+      searchIvfRouted(spark, s"$dir/shard=$sh", queries, queryIdCol, vecCol, k,
+        shardNprobe(spark, s"$dir/shard=$sh", "ivf", k, nprobe, m.tables),
+        corpusFilter, localMaxBytes, probed))
+    val merged = mergeShardTopK(
+      routed.map(_.fold(identity, { case (schema, rows) => localFrame(spark, schema, rows) })),
       m.idCol, k)
+    if (routed.exists(_.isLeft)) merged
+    else localFrame(spark, merged.schema,
+      LocalIvf.mergeTopK(routed.flatMap(_.toOption.get._2), k))
   }
 
   /** Per-shard probe resolution for the SHARDED searches: explicit
@@ -1255,7 +1493,7 @@ object AnnIndex {
     * (each shard's probe resolution collects its probed-cell set — a
     * driver round-trip serially; the scoring itself is one unioned
     * Spark job either way). */
-  private def fanOut(nShards: Int)(one: Int => DataFrame): Seq[DataFrame] = {
+  private def fanOut[T](nShards: Int)(one: Int => T): Seq[T] = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     val pool = java.util.concurrent.Executors

@@ -438,8 +438,9 @@ object Similarity {
     * SMALL (N < 100k): max(cells/3, pool target of 30·k candidates).
     * Tuned for recall ≥ 0.85 on the PESSIMAL near-uniform distribution,
     * measured on the testdata embeddings (r8 sweep): at N=500/22 cells,
-    * 59% probed = 0.86 and the rule picks 64%; at N=2000/45 cells, 33%
-    * probed = 0.86 and the rule picks 33%. At these sizes even brute
+    * 59% probed = 0.86 and the rule picks 64%; at N=2000/45 cells the
+    * rule picks 33%, where recall@10 on the sf0.1 embeddings measures
+    * 0.7719, not the sweep's 0.86 (perfbench/NOTES.md). At these sizes even brute
     * force is cheap, so the rule buys recall insurance with compute.
     * SCOPE (r17): that ≥0.85 uniform-data guarantee holds BELOW the
     * blend ramp (N < 50k), where the small rule applies un-blended.

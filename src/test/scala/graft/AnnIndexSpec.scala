@@ -151,8 +151,10 @@ class AnnIndexSpec extends SparkSpec {
     // candidate's payload) — pin the strategy
     // string-match: the executed plan is an AdaptiveSparkPlan wrapper,
     // which collect() does not traverse into
-    val plan = AnnIndex.searchIvf(spark, dir, emb.filter(col("vec_id") < 2),
-      "vec_id", "embedding", k = 3, nprobe = 16)
+    // (bound 0: the distributed plan, as every search with pending
+    // tombstones takes)
+    val plan = AnnIndex.searchIvfImpl(spark, dir, emb.filter(col("vec_id") < 2),
+      "vec_id", "embedding", k = 3, nprobe = 16, corpusFilter = None, localMaxBytes = 0)
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftAnti"),
       s"tombstone filter must broadcast the tombstone side:\n$plan")
@@ -376,9 +378,10 @@ class AnnIndexSpec extends SparkSpec {
   test("IVF: the search scan partition-prunes to the probed cells") {
     val dir = tempDir("graft_ivf_prune")
     AnnIndex.buildIvf(emb, "vec_id", "embedding", dir, nlist = 16, seed = 7L)
-    val search = AnnIndex.searchIvf(
+    // bound 0: the distributed plan a search over the local bound takes
+    val search = AnnIndex.searchIvfImpl(
       spark, dir, emb.filter(col("vec_id") < 2), "vec_id", "embedding",
-      k = 5, nprobe = 3)
+      k = 5, nprobe = 3, corpusFilter = None, localMaxBytes = 0)
     // sparkPlan, not executedPlan: AQE wraps the executed plan in an
     // AdaptiveSparkPlanExec whose children aren't traversable pre-execution
     val scans = search.queryExecution.sparkPlan.collect {
@@ -1099,8 +1102,8 @@ class AnnIndexSpec extends SparkSpec {
       .getAs[Long]("n_rows") === emb.count())
     // the layout contract survives: the compacted scan still partition-
     // prunes to the probed cells
-    val plan = AnnIndex.searchIvf(spark, dir, queries, "vec_id", "embedding",
-      k = 8, nprobe = 3)
+    val plan = AnnIndex.searchIvfImpl(spark, dir, queries, "vec_id", "embedding",
+      k = 8, nprobe = 3, corpusFilter = None, localMaxBytes = 0)
     val scans = plan.queryExecution.sparkPlan.collect {
       case f: FileSourceScanExec
         if f.metadata.get("Location").exists(_.contains("corpus.parquet")) => f
@@ -1299,5 +1302,120 @@ class AnnIndexSpec extends SparkSpec {
       .searchIvfSharded(spark, dir, q, "vec_id", "embedding", k = 1, nprobe = 8)
       .select(col("vec_id").cast("long")).head().getLong(0)
     assert(top === committed.head)
+  }
+
+  // ---------------------------------------------- driver-local search gate
+
+  private def isLocal(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+
+  /** Identical rows and an identical StructType, nullability and metadata
+    * included. */
+  private def assertSameAnswer(local: DataFrame, dist: DataFrame, what: String): Unit = {
+    assert(local.schema === dist.schema, s"$what: ${local.schema.treeString} vs ${dist.schema.treeString}")
+    def sorted(df: DataFrame) = df.collect().toSeq.sortBy(r => (String.valueOf(r.get(0)), r.getInt(3)))
+    assert(sorted(local) === sorted(dist), what)
+  }
+
+  private def gateId(idType: String, i: Long): Any = idType match {
+    case "int"  => i.toInt
+    case "long" => i
+    case _      => f"v$i%04d"
+  }
+
+  /** 210 seeded 8-dim vectors, ids of the given type carrying column
+    * metadata; rows 200-209 repeat rows 0-9 (tied cosines). Queries: six
+    * corpus rows, an outside id on row 5's vector, a zero vector, a NaN
+    * element (Spark keeps the NaN norm and answers NaN cosines) and a
+    * null id. */
+  private def gateFixture(idType: String): (DataFrame, DataFrame) = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val rnd = new scala.util.Random(11)
+    val vecs = Array.fill(200)(Array.fill(8)(rnd.nextGaussian().toFloat))
+    def id(i: Long) = gateId(idType, i)
+    val idT = idType match { case "int" => IntegerType; case "long" => LongType; case _ => StringType }
+    val md = new MetadataBuilder().putString("origin", "gate").build()
+    val schema = StructType(Seq(StructField("vec_id", idT, nullable = true, md),
+      StructField("embedding", ArrayType(FloatType, containsNull = true))))
+    def frame(rows: Seq[Row]) = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    val corpus = frame((0 until 210).map(i => Row(id(i.toLong), vecs(i % 200).toSeq)))
+    val queries = frame((0 until 6).map(i => Row(id(i * 7L), vecs(i * 7).toSeq)) ++ Seq(
+      Row(id(9001L), vecs(5).toSeq),
+      Row(id(9002L), Seq.fill(8)(0.0f)),
+      Row(id(9003L), vecs(9).updated(4, Float.NaN).toSeq),
+      Row(null, vecs(3).toSeq)))
+    (corpus, queries)
+  }
+
+  test("local IVF search ≡ the distributed plan: probes, id types, ties, k over the pool, shards") {
+    for (idType <- Seq("int", "long", "string")) {
+      val (corpus, queries) = gateFixture(idType)
+      val dir = tempDir(s"graft_ivf_gate_$idType")
+      AnnIndex.buildIvf(corpus, "vec_id", "embedding", dir, nlist = 8, seed = 3L)
+      def id(i: Long) = gateId(idType, i)
+      for ((nprobe, k) <- Seq((3, 5), (8, 5), (1, 100))) {
+        val what = s"$idType ids, nprobe=$nprobe, k=$k"
+        def run(bound: Long) = AnnIndex.searchIvfImpl(spark, dir, queries, "vec_id", "embedding",
+          k, nprobe, None, bound)
+        val local = run(AnnIndex.LocalSearchMaxBytes)
+        val dist = run(0)
+        assert(isLocal(local) && !isLocal(dist), what)
+        assertSameAnswer(local, dist, what)
+        val got = local.collect()
+        // self-matches, the zero vector and the null id never answer;
+        // the outside and NaN queries do, the twin hits tie and rank by id
+        assert(!got.exists(r => r.get(0) == r.get(1)) && !got.exists(_.isNullAt(0)), what)
+        assert(got.map(r => String.valueOf(r.get(0))).distinct.length === 8, what)
+        val twins = got.filter(_.get(0) == id(9001L)).sortBy(_.getInt(3)).take(2)
+        assert(twins.map(_.get(1)).toSeq === Seq(id(5L), id(205L)) &&
+          twins(0).getDouble(2) == twins(1).getDouble(2), what)
+      }
+    }
+    val (corpus, queries) = gateFixture("long")
+    val sh = tempDir("graft_ivf_gate_sh")
+    AnnIndex.buildIvfSharded(corpus, "vec_id", "embedding", sh, nShards = 3, nlist = 4, seed = 3L)
+    for (nprobe <- Seq(2, 4)) {
+      def run(bound: Long) = AnnIndex.searchIvfShardedImpl(spark, sh, queries, "vec_id", "embedding",
+        10, nprobe, None, bound)
+      val local = run(AnnIndex.LocalSearchMaxBytes)
+      val dist = run(0)
+      assert(isLocal(local) && !isLocal(dist))
+      assertSameAnswer(local, dist, s"sharded, nprobe=$nprobe")
+    }
+  }
+
+  test("local IVF search falls through: quantized, tombstones, corpus filter, one pool byte over") {
+    import spark.implicits._
+    val (corpus, queries) = gateFixture("long")
+    val dir = tempDir("graft_ivf_gate_fall")
+    AnnIndex.buildIvf(corpus, "vec_id", "embedding", dir, nlist = 8, seed = 3L)
+    def run(d: String, bound: Long, filter: Option[org.apache.spark.sql.Column] = None) =
+      AnnIndex.searchIvfImpl(spark, d, queries, "vec_id", "embedding", 5, 8, filter, bound)
+    // exhaustive probes: every nonzero query's pool is the centroid table
+    // it ranks plus the whole corpus
+    def bytes(table: String) = {
+      import org.apache.hadoop.fs.Path
+      val p = new Path(s"$dir/$table")
+      val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
+      var n = 0L
+      while (it.hasNext) { val f = it.next(); if (f.getPath.getName.startsWith("part-")) n += f.getLen }
+      n
+    }
+    val pool = 9 * (bytes("centroids.parquet") + bytes("corpus.parquet")) // 10 queries, one zero
+    assert(isLocal(run(dir, pool)), "a pool at the bound stays local")
+    val over = run(dir, pool - 1)
+    assert(!isLocal(over), "a pool one byte over the bound takes the plan")
+    assertSameAnswer(run(dir, pool), over, "at vs over the bound")
+    val filtered = run(dir, pool, Some(col("vec_id") > 20L))
+    assert(!isLocal(filtered))
+    assert(filtered.collect().forall(_.getLong(1) > 20L))
+    val q = tempDir("graft_ivf_gate_q")
+    AnnIndex.buildIvf(corpus, "vec_id", "embedding", q, nlist = 8, seed = 3L, quantize = true)
+    assert(!isLocal(run(q, AnnIndex.LocalSearchMaxBytes)))
+    AnnIndex.deleteIds(spark, dir, Seq(0L, 7L).toDF("vec_id"))
+    val tomb = run(dir, AnnIndex.LocalSearchMaxBytes)
+    assert(!isLocal(tomb))
+    assert(tomb.collect().forall(r => r.getLong(1) != 0L && r.getLong(1) != 7L))
   }
 }

@@ -293,4 +293,29 @@ class ModelSpec extends SparkSpec {
     assert(runsLocally(df, 600))
     assert(runsLocally(seeded(17, 3996).coalesce(1), Training.LocalFitMaxCells))
   }
+
+  test("gridSearchOrTrain: a class under 2 rows degrades to train's fit, on the local path and after the count") {
+    val degenerate = ((1 to 14).map(i => (i.toLong, i.toDouble, (i % 3).toDouble, 0.0)) :+ ((15L, 9.5, 1.0, 1.0)))
+      .toDF("id", "x1", "x2", "label").coalesce(1)
+    val features = Seq("x1", "x2")
+    val lrGrid = Map[String, Seq[Any]]("regParam" -> Seq(0.0, 0.1))
+    // local path: the class count comes from the probe rows
+    val lm = Training.gridSearchOrTrain(degenerate, "label", features, "logistic_regression", lrGrid, 2)
+    val tm = Training.train(degenerate, "label", features)
+    assert(!lrStage(lm).hasSummary)
+    assert(stageParams(lm) === stageParams(tm))
+    assert(scoresOf(lm, degenerate) === scoresOf(tm, degenerate))
+    // fall-through: a random forest counts the classes with an aggregate
+    val rfGrid = Map[String, Seq[Any]]("numTrees" -> Seq(3))
+    val rf = Training.gridSearchOrTrain(degenerate, "label", features, "random_forest_classifier", rfGrid, 2)
+    val rfTrain = Training.train(degenerate, "label", features, "random_forest_classifier")
+    assert(scoresOf(rf, degenerate) === scoresOf(rfTrain, degenerate))
+    // every class with 2+ rows: the search's best model
+    val df = seeded(13, 120).coalesce(1)
+    val best = Training.gridSearch(df, "label", Seq("x1", "x2", "x3"), "logistic_regression", lrGrid, 2)
+      .bestModel.asInstanceOf[PipelineModel]
+    val got = Training.gridSearchOrTrain(df, "label", Seq("x1", "x2", "x3"), "logistic_regression", lrGrid, 2)
+    assert(stageParams(got) === stageParams(best))
+    assert(scoresOf(got, df) === scoresOf(best, df))
+  }
 }

@@ -169,7 +169,13 @@ class PlanFingerprintSpec extends SparkSpec {
     // the remaining windows are exactly the per-shard top-k rank + the
     // final merge heap. A window count CLIMBING back toward the old pin
     // means an exhaustive search fell off the fast path.
-    "ann_sharded_search_exact" -> Map("broadcast_hash_join" -> 3, "global_sort" -> 1, "local_sort" -> 6, "shuffle" -> 4, "window" -> 3, "window_group_limit" -> 6),
+    // re-pinned (driver-local IVF search): the sharded, compacted and
+    // resharded searches are driver-sized, so searchIvf answers them on the
+    // driver and each plan is its local relation + the root sort (one
+    // LocalTableScan, 1 scan). Their distributed shapes — the pins above
+    // and below as they were — stay pinned at local bound 0 in "the
+    // distributed IVF search plans keep their shapes at local bound 0"
+    "ann_sharded_search_exact" -> Map("global_sort" -> 1, "shuffle" -> 1),
     // r21 re-pin (shuffle 7 → 10): the per-shard ADC LUT is now ONE
     // map-only PqLutArray projection against the codebooks folded into a
     // single broadcast row; the fold's tiny keyed groupBy adds one
@@ -179,10 +185,11 @@ class PlanFingerprintSpec extends SparkSpec {
     // search). shuffle DROPPING back to 7 with a broadcast_nested_loop
     // climbing means the exploded LUT came back.
     "ann_ivfpq_sharded_exact" -> Map("broadcast" -> 7, "broadcast_hash_join" -> 9, "broadcast_nested_loop" -> 3, "global_sort" -> 1, "local_sort" -> 9, "shuffle" -> 10, "window" -> 6, "window_group_limit" -> 9),
-    "ann_compacted_search_exact" -> Map("broadcast_hash_join" -> 1, "global_sort" -> 1, "local_sort" -> 2, "shuffle" -> 2, "window" -> 1, "window_group_limit" -> 2),
+    "ann_compacted_search_exact" -> Map("global_sort" -> 1, "shuffle" -> 1),
     // the resharded query is the 2-shard fan-out shape (per-shard counts
-    // ×2 + the heap merge + root sort) over the post-reshard layout
-    "ann_resharded_search_exact" -> Map("broadcast_hash_join" -> 2, "global_sort" -> 1, "local_sort" -> 4, "shuffle" -> 3, "window" -> 2, "window_group_limit" -> 4))
+    // ×2 + the heap merge + root sort) over the post-reshard layout at
+    // bound 0; local relation + root sort here (re-pin above)
+    "ann_resharded_search_exact" -> Map("global_sort" -> 1, "shuffle" -> 1))
 
   /** Scan-count pins for the fanout knife-edge queries: an operator that
     * fans a derived input out N ways re-inlines the derivation into N
@@ -197,10 +204,13 @@ class PlanFingerprintSpec extends SparkSpec {
     // per-shard searches scan (centroids + pruned corpus) per shard +
     // the query frame; the PQ twin adds the codebook scan per shard.
     // A jump means a shard's search re-inlined a derived frame
-    "ann_sharded_search_exact" -> 9,
+    // (re-pinned with the fingerprints: the driver-local searches scan
+    // their local relation once; the distributed counts 9/3/6 are pinned
+    // at bound 0)
+    "ann_sharded_search_exact" -> 1,
     "ann_ivfpq_sharded_exact" -> 16,
-    "ann_compacted_search_exact" -> 3,
-    "ann_resharded_search_exact" -> 6)
+    "ann_compacted_search_exact" -> 1,
+    "ann_resharded_search_exact" -> 1)
 
   private def withAqeOff[T](f: => T): T = {
     val prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
@@ -231,6 +241,36 @@ class PlanFingerprintSpec extends SparkSpec {
         "scan count changed — a fanout re-inlined a derivation (or a " +
           "deliberate restage; re-pin and explain in the commit):\n" +
           diffs.mkString("\n"))
+    }
+  }
+
+  test("the distributed IVF search plans keep their shapes at local bound 0") {
+    // the registry's ann_*_search_exact queries answer on the driver since
+    // searchIvf's local route; their distributed plans (the shapes pinned
+    // for them before, comments above) stay pinned here, over the same
+    // staged indexes and queries, at bound 0
+    import graft.similarity.AnnIndex
+    withAqeOff {
+      val e = spark.read.parquet(s"$dir/embeddings.parquet")
+      val q = e.filter(col("vec_id") < 5)
+      def sharded(idx: String) = AnnIndex.searchIvfShardedImpl(spark, idx, q, "vec_id",
+        "embedding", 10, 16, None, 0)
+      val plans = Seq(
+        ("ann_sharded_search_exact", "ivfsh", sharded _,
+          Map("broadcast_hash_join" -> 3, "global_sort" -> 1, "local_sort" -> 6, "shuffle" -> 4, "window" -> 3, "window_group_limit" -> 6), 9),
+        ("ann_compacted_search_exact", "ivfcmp",
+          (idx: String) => AnnIndex.searchIvfImpl(spark, idx, q, "vec_id", "embedding", 10, 16, None, 0),
+          Map("broadcast_hash_join" -> 1, "global_sort" -> 1, "local_sort" -> 2, "shuffle" -> 2, "window" -> 1, "window_group_limit" -> 2), 3),
+        ("ann_resharded_search_exact", "ivfrsh", sharded _,
+          Map("broadcast_hash_join" -> 2, "global_sort" -> 1, "local_sort" -> 4, "shuffle" -> 3, "window" -> 2, "window_group_limit" -> 4), 6))
+      val diffs = plans.flatMap { case (name, kind, search, want, scans) =>
+        SparkEntry.queries(name)(spark, dir) // stages the index
+        val df = search(graft.queries.LlmQueries.annIndexDir(dir, kind))
+          .orderBy(col("query_id"), col("rank"))
+        val got = (PlanAudit.fingerprint(df), PlanAudit.scanCount(df))
+        if (got == (want, scans)) None else Some(s"$name: pinned ${(want, scans)}, actual $got")
+      }
+      assert(diffs.isEmpty, diffs.mkString("\n"))
     }
   }
 
