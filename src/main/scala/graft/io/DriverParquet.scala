@@ -2,6 +2,7 @@ package graft.io
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.column.{ColumnDescriptor, ColumnReader}
 import org.apache.parquet.column.impl.ColumnReadStoreImpl
 import org.apache.parquet.example.data.Group
@@ -61,11 +62,18 @@ object DriverParquet {
     throw new IllegalStateException(s"$dir is empty — expected at least one row")
   }
 
+  /** A reader of `file` whose options come from `conf`: the options'
+    * default is a fresh Hadoop Configuration, which parses the default
+    * resource XML on its first lookup — per file, the larger part of
+    * reading a cell of a few hundred KB. */
+  private def open(conf: Configuration, file: Path): ParquetFileReader =
+    ParquetFileReader.open(HadoopInputFile.fromPath(file, conf), HadoopReadOptions.builder(conf, file).build())
+
   /** The Spark row schema recorded in `file`'s footer, as Spark's parquet
     * reader resolves it (metadata included), or None for a file Spark did
     * not write. */
   def sparkSchema(conf: Configuration, file: Path): Option[StructType] = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    val reader = open(conf, file)
     try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey))
       .map(DataType.fromJson).collect { case s: StructType => s }
     finally reader.close()
@@ -79,7 +87,7 @@ object DriverParquet {
     * list holds a null element; a null value is null. Reads both the
     * 3-level list layout Spark writes and the legacy 2-level one. */
   def readColumns(conf: Configuration, file: Path, columns: Seq[String]): Vector[Array[Any]] = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    val reader = open(conf, file)
     try {
       val meta = reader.getFooter.getFileMetaData
       val schema = new MessageType(meta.getSchema.getName,

@@ -172,8 +172,8 @@ object Training {
     * rows — stratified folds then hand every training fold every class —
     * else one [[train]] fit, announced on stderr: a tiny or degenerate
     * label (14/1 at sf0.001) degrades loudly instead of failing. A search
-    * that runs on the driver counts the classes in the rows its probe
-    * already holds; only one that falls through runs a class-count
+    * whose local probe holds the frame counts the classes in those rows
+    * (and a single fit reuses them); only one without runs a class-count
     * aggregate first. */
   def gridSearchOrTrain(
       df: DataFrame,
@@ -181,9 +181,17 @@ object Training {
       featureCols: Seq[String],
       modelName: String,
       grid: Map[String, Seq[Any]],
-      numFolds: Int = 3): PipelineModel =
-    crossValidate(df, labelCol, featureCols, modelName, grid, numFolds, LocalFitMaxCells,
-      rareClassFit = true).fold(identity, _.bestModel.asInstanceOf[PipelineModel])
+      numFolds: Int = 3): PipelineModel = {
+    val search = new GridSearch(df, labelCol, featureCols, modelName, grid, numFolds, LocalFitMaxCells)
+    val counts = search.probed.map(_.labels.groupBy(identity).values.map(_.length.toLong).toSeq)
+      .getOrElse(df.groupBy(col(labelCol)).count().limit(1000).collect().map(_.getLong(1)).toSeq)
+    if (counts.size >= 2 && counts.min >= 2) search.fit().bestModel.asInstanceOf[PipelineModel]
+    else {
+      System.err.println(
+        "[graft] gridSearch: a label class has < 2 examples — CV infeasible, single fit")
+      search.singleFit()
+    }
+  }
 
   /** [[gridSearch]] with its local bound as a parameter (0 forces the
     * CrossValidator). A `logistic_regression` grid whose every point stays
@@ -202,97 +210,98 @@ object Training {
       grid: Map[String, Seq[Any]],
       numFolds: Int,
       localMaxCells: Int): CrossValidatorModel =
-    crossValidate(df, labelCol, featureCols, modelName, grid, numFolds, localMaxCells,
-      rareClassFit = false).toOption.get
+    new GridSearch(df, labelCol, featureCols, modelName, grid, numFolds, localMaxCells).fit()
 
-  /** The search behind [[gridSearchImpl]]; with `rareClassFit`, a label
-    * class under 2 rows makes it Left(one [[trainImpl]] fit) instead. */
-  private def crossValidate(
+  /** One grid search, set up: the CrossValidator over the registry
+    * estimator's pipeline and, for a logistic grid the local path can
+    * replay, that path's probe, run at most once. */
+  private final class GridSearch(
       df: DataFrame,
       labelCol: String,
       featureCols: Seq[String],
       modelName: String,
       grid: Map[String, Seq[Any]],
       numFolds: Int,
-      localMaxCells: Int,
-      rareClassFit: Boolean): Either[PipelineModel, CrossValidatorModel] = {
+      localMaxCells: Int) {
     require(grid.nonEmpty && grid.values.forall(_.nonEmpty),
       "gridSearch needs a non-empty param_grid with non-empty value lists")
-    val assembler = assemblerOf(featureCols)
-    val est = Registry.estimator(modelName, "features", labelCol)
-    val builder = new ParamGridBuilder()
-    grid.toSeq.sortBy(_._1).foreach { case (name, values) =>
-      require(est.hasParam(name),
-        s"model '$modelName' has no param '$name'; known: ${est.params.map(_.name).sorted.mkString(", ")}")
-      val p = est.getParam(name)
-      builder.addGrid(p.asInstanceOf[Param[Any]], values.map(coerce(p, _)))
+    private val assembler = assemblerOf(featureCols)
+    private val est = Registry.estimator(modelName, "features", labelCol)
+    private val paramMaps = {
+      val builder = new ParamGridBuilder()
+      grid.toSeq.sortBy(_._1).foreach { case (name, values) =>
+        require(est.hasParam(name),
+          s"model '$modelName' has no param '$name'; known: ${est.params.map(_.name).sorted.mkString(", ")}")
+        val p = est.getParam(name)
+        builder.addGrid(p.asInstanceOf[Param[Any]], values.map(coerce(p, _)))
+      }
+      builder.build()
     }
-    val regression = Registry.regressionModels.contains(modelName)
-    val evaluator =
+    private val regression = Registry.regressionModels.contains(modelName)
+    private val evaluator =
       if (regression) new RegressionEvaluator().setLabelCol(labelCol)
       else new BinaryClassificationEvaluator().setLabelCol(labelCol)
-    val pipeline = new Pipeline().setStages(Array(assembler, est))
-    val paramMaps = builder.build()
-    val cv = new CrossValidator()
+    private val pipeline = new Pipeline().setStages(Array(assembler, est))
+    private val cv = new CrossValidator()
       .setEstimator(pipeline)
       .setEvaluator(evaluator)
       .setEstimatorParamMaps(paramMaps)
       .setNumFolds(numFolds)
       .setParallelism(4)
       .setSeed(0L)
-    // Stratified folds for classification: spark.ml's random split can
-    // hand a training fold ZERO examples of a rare class (the fit then
-    // fails, or silently learns a one-class model). Deterministic
-    // md5-ordered row_number per class mod folds gives every fold a
-    // proportional share of each class — every training fold sees every
-    // class whenever each class has >= 2 examples. The window partitions
-    // by label (bounded cardinality for classification), not globally.
-    def rareClass(counts: Iterable[Long]) =
-      rareClassFit && (counts.size < 2 || counts.min < 2)
-    def singleFit(fit: => PipelineModel): Left[PipelineModel, Nothing] = {
-      System.err.println(
-        "[graft] gridSearch: a label class has < 2 examples — CV infeasible, single fit")
-      Left(fit)
+    private val order = md5(concat_ws("\u0000", df.columns.map(c => col(c).cast("string")): _*))
+
+    /** The local path's estimator and its evaluator's `numBins`: a
+      * classification grid whose every point is plain binomial L-BFGS. */
+    private val localLr: Option[(LogisticRegression, Int)] = (est, evaluator) match {
+      case (lr: LogisticRegression, auc: BinaryClassificationEvaluator)
+          if paramMaps.forall(pm => LocalLogistic.plainBinomial(lr.copy(pm))) =>
+        Some((lr, auc.getNumBins))
+      case _ => None
     }
-    // the fall-through's class count: one aggregate, run only when asked
-    def rareInFrame = rareClassFit &&
-      rareClass(df.groupBy(col(labelCol)).count().limit(1000).collect().map(_.getLong(1)))
-    def trainFit = singleFit(trainImpl(df, labelCol, featureCols, modelName, localMaxCells))
-    if (regression) {
-      if (rareInFrame) trainFit
-      else Right(cv.fit(df))
-    } else {
-      import org.apache.spark.sql.expressions.Window
-      val order = md5(concat_ws("\u0000", df.columns.map(c => col(c).cast("string")): _*))
-      cv.setFoldCol("__fold")
-      val local = (est, evaluator) match {
-        case (lr: LogisticRegression, auc: BinaryClassificationEvaluator)
-            if paramMaps.forall(pm => LocalLogistic.plainBinomial(lr.copy(pm))) =>
-          // the probe stays narrow (md5 is a projection): a frame over the
-          // bound costs one early-stopping scan, never the window's shuffle
-          val numBins = auc.getNumBins
-          val maxRows = math.min(localMaxCells / (featureCols.size + 2),
-            if (numBins > 0) 2L * numBins * numFolds else Long.MaxValue).toInt
-          probeBinary(assembler.transform(df), labelCol, maxRows, localMaxCells, Some(order))
-            .flatMap { p =>
-              // train's local fit (the registry's estimator is plain
-              // binomial), from the rows already held
-              if (rareClass(p.labels.groupBy(identity).values.map(_.length.toLong)))
-                Some(singleFit(LocalLogistic.pipelineModel(pipeline,
-                  Array(assembler, LocalLogistic.fit(lr, p.labels, p.features)))))
-              else localCrossValidate(p, lr, assembler, pipeline, cv, paramMaps, numFolds, numBins)
-                .map(Right(_))
-            }
-        case _ => None
+
+    /** The local path's rows, or None when it does not apply or the frame
+      * is over its bound. The probe stays narrow (md5 is a projection): a
+      * frame over the bound costs one early-stopping scan, never the
+      * window's shuffle. */
+    lazy val probed: Option[Probed] = localLr.flatMap { case (_, numBins) =>
+      val maxRows = math.min(localMaxCells / (featureCols.size + 2),
+        if (numBins > 0) 2L * numBins * numFolds else Long.MaxValue).toInt
+      probeBinary(assembler.transform(df), labelCol, maxRows, localMaxCells, Some(order))
+    }
+
+    /** The cross-validated search, on the driver when [[probed]] holds
+      * the frame and its folds replay. */
+    def fit(): CrossValidatorModel =
+      if (regression) cv.fit(df)
+      else {
+        // Stratified folds for classification: spark.ml's random split can
+        // hand a training fold ZERO examples of a rare class (the fit then
+        // fails, or silently learns a one-class model). Deterministic
+        // md5-ordered row_number per class mod folds gives every fold a
+        // proportional share of each class — every training fold sees every
+        // class whenever each class has >= 2 examples. The window partitions
+        // by label (bounded cardinality for classification), not globally.
+        import org.apache.spark.sql.expressions.Window
+        cv.setFoldCol("__fold")
+        probed.zip(localLr)
+          .flatMap { case (p, (lr, numBins)) =>
+            localCrossValidate(p, lr, assembler, pipeline, cv, paramMaps, numFolds, numBins)
+          }
+          .getOrElse {
+            val w = Window.partitionBy(col(labelCol)).orderBy(order)
+            cv.fit(df.withColumn("__fold", ((row_number().over(w) - lit(1)) % numFolds).cast("int")))
+          }
       }
-      local.getOrElse {
-        if (rareInFrame) trainFit
-        else {
-          val w = Window.partitionBy(col(labelCol)).orderBy(order)
-          Right(cv.fit(df.withColumn("__fold", ((row_number().over(w) - lit(1)) % numFolds).cast("int"))))
+
+    /** [[train]]'s fit: from the probed rows when they are held (the
+      * registry's estimator is plain binomial), else [[trainImpl]]. */
+    def singleFit(): PipelineModel =
+      probed.zip(localLr.map(_._1).filter(LocalLogistic.plainBinomial))
+        .map { case (p, lr) =>
+          LocalLogistic.pipelineModel(pipeline, Array(assembler, LocalLogistic.fit(lr, p.labels, p.features)))
         }
-      }
-    }
+        .getOrElse(trainImpl(df, labelCol, featureCols, modelName, localMaxCells))
   }
 
   /** CrossValidator.fit over probed rows. The `__fold` window is replayed:

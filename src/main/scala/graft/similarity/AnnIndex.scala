@@ -2,7 +2,7 @@ package graft.similarity
 
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.sql.types.StructType
 
 /** Persistable ANN index: build once, search many.
   *
@@ -534,21 +534,19 @@ object AnnIndex {
     * Driver-sized searches run on the driver (SystemML's hybrid runtime,
     * the [[graft.LocalGate]] contract): with no `corpusFilter`, over an
     * unquantized index without pending tombstones, when the query frame
-    * passes one [[graft.LocalGate]] probe of [[LocalSearchMaxQueries]] rows
-    * and the centroid table plus the probed cells hold at most
-    * [[LocalSearchMaxBytes]] on-disk bytes summed over queries, the
-    * centroids and probed cell files are
-    * read with parquet-hadoop and the search is replayed by
-    * [[LocalIvf]] — the same rows and the same schema, returned as a
-    * local relation. At the 8 MB bound, on 4 vCPU over two sittings, the
-    * local route took 0.32–0.46 s against the plan's 0.43–0.74 s on a
-    * scoring-bound pool and 0.37–0.45 s against 0.38–0.55 s on a
-    * read-bound one (`graft.tools.GateBench ivf`, SCALE.md "IVF search
-    * gate"). That route is EAGER: the query frame, centroids and
-    * cells are read when this is called, not when the result is
-    * consumed, so an append landing in between is not seen. Every other
-    * search is the lazy distributed plan. The chosen route, probed
-    * cells, candidate rows and pool bytes are logged at INFO. */
+    * passes one [[graft.LocalGate]] probe and the centroid table plus the
+    * probed cells hold at most [[LocalSearchMaxBytes]] on-disk bytes
+    * summed over queries, the centroids and probed cell files are read
+    * with parquet-hadoop and the search is replayed by [[LocalIvf]] — the
+    * same rows and the same schema, returned as a local relation. The
+    * probe admits at most as many rows as the bound holds centroid
+    * tables, so a query frame too big for the pool costs one short probe
+    * (`graft.tools.GateBench ivf` times both routes; SCALE.md "IVF search
+    * gate"). That route is EAGER: the query frame, centroids and cells
+    * are read when this is called, not when the result is consumed, so
+    * an append landing in between is not seen. Every other search is the
+    * lazy distributed plan. The chosen route, probed cells, candidate
+    * rows and pool bytes are logged at INFO. */
   def searchIvf(
       spark: SparkSession,
       dir: String,
@@ -562,19 +560,16 @@ object AnnIndex {
       LocalSearchMaxBytes)
 
   /** On-disk bytes of the centroid table and the probed cells, summed
-    * over queries, up to which [[searchIvf]] runs on the driver: it reads,
-    * ranks and scores that pool
-    * single-threaded, where the plan pays file listing, schema inference
-    * and probe jobs first. The largest power of two at which the local
-    * route did not lose to the plan on a read-bound pool, the worst case
-    * (`graft.tools.GateBench ivf`; at 16 MB it lost). A bound on data
-    * size, never on cores. */
+    * over queries (and over shards), up to which [[searchIvf]] and
+    * [[searchIvfSharded]] run on the driver: it reads, ranks and scores
+    * that pool single-threaded, where the plan pays file listing, schema
+    * inference and probe jobs first. Set from `graft.tools.GateBench ivf`
+    * (4 vCPU, SCALE.md "IVF search gate"): at 8 MB the local route won
+    * every run, one index or 3 shards, 0.19–0.30 s against the plan's
+    * 0.39–0.97 s; at 16 MB it still won, but a read-bound pool's margin
+    * closed to 0.03 s, so the bound stays one power of two below. A
+    * bound on data size, never on cores. */
   private[graft] val LocalSearchMaxBytes: Long = 8L << 20
-
-  /** Query rows [[searchIvf]]'s local route collects at most: the query
-    * frame is broadcast-sized by contract, and 4,096 rows of 1,536-dim
-    * doubles are 50 MB. */
-  private[graft] val LocalSearchMaxQueries: Int = 4096
 
   /** [[searchIvf]] with its local bound as a parameter (0 forces the
     * distributed plan and runs no probe). */
@@ -588,59 +583,36 @@ object AnnIndex {
       nprobe: Int,
       corpusFilter: Option[org.apache.spark.sql.Column],
       localMaxBytes: Long): DataFrame = {
-    lazy val probed = probeQueries(queries, queryIdCol, vecCol)
-    searchIvfRouted(spark, dir, queries, queryIdCol, vecCol, k, nprobe, corpusFilter,
-      localMaxBytes, probed).fold(identity, { case (schema, rows) => localFrame(spark, schema, rows) })
+    val t = ivfTarget(spark, dir, k, nprobe)
+    localIvf(spark, dir, Seq(t), queries, queryIdCol, vecCol, k, corpusFilter, localMaxBytes)
+      .map { case (schema, answers) => localFrame(spark, schema, answers.head) }
+      .getOrElse(distributedSearch(spark, t, queries, queryIdCol, vecCol, k, corpusFilter))
   }
 
-  /** One IVF search, routed: Right(schema, rows) from the driver, or
-    * Left(the distributed plan). `probed` is the query frame's one
-    * [[graft.LocalGate]] probe, forced only when the route is still open. */
-  private def searchIvfRouted(
-      spark: SparkSession,
-      dir: String,
-      queries: DataFrame,
-      queryIdCol: String,
-      vecCol: String,
-      k: Int,
-      nprobe: Int,
-      corpusFilter: Option[org.apache.spark.sql.Column],
-      localMaxBytes: Long,
-      probed: => Option[Seq[LocalIvf.Query]])
-      : Either[DataFrame, (StructType, Seq[Row])] = {
+  /** One IVF index a search reads: its directory, meta and probe count. */
+  private final case class IvfTarget(dir: String, m: Meta, probes: Int)
+
+  /** The IVF index at `dir` with `nprobe` resolved (0 = the auto rule). */
+  private def ivfTarget(spark: SparkSession, dir: String, k: Int, nprobe: Int): IvfTarget = {
     require(nprobe >= 0, s"nprobe must be >= 0 (0 = auto), got $nprobe")
     val m = readMeta(spark, dir, "ivf")
     val probes =
       if (nprobe > 0) nprobe else Similarity.ivfAutoNprobe(m.nlist, m.nRows, k)
     require(probes >= 1 && probes <= m.nlist,
       s"need 1 <= nprobe <= nlist, got nprobe=$probes nlist=${m.nlist}")
-    val open =
-      if (localMaxBytes <= 0) Left("bound 0")
-      else if (corpusFilter.isDefined) Left("corpus filter")
-      else if (m.quantized) Left("quantized")
-      else if (hasTombstones(spark, dir)) Left("pending tombstones")
-      else localSchema(spark, dir, m.idCol, queries, queryIdCol, vecCol)
-    val local = open.flatMap(schema =>
-      probed.toRight(s"query frame over $LocalSearchMaxQueries rows or ids not distinct")
-        .flatMap(qs => localSearch(spark, dir, schema(1), qs, probes, k, localMaxBytes))
-        .map(rows => (schema, rows)))
-    local.left.map { why =>
-      log.info(s"ivf search $dir: route=distributed ($why)")
-      distributedSearch(spark, dir, m, queries, queryIdCol, vecCol, k, probes, corpusFilter)
-    }
+    IvfTarget(dir, m, probes)
   }
 
-  /** The distributed IVF search plan. */
+  /** The distributed IVF search plan over one index. */
   private def distributedSearch(
       spark: SparkSession,
-      dir: String,
-      m: Meta,
+      t: IvfTarget,
       queries: DataFrame,
       queryIdCol: String,
       vecCol: String,
       k: Int,
-      probes: Int,
       corpusFilter: Option[org.apache.spark.sql.Column]): DataFrame = {
+    val IvfTarget(dir, m, probes) = t
     val centDf = spark.read.parquet(s"$dir/centroids.parquet")
     // exhaustive operating point (nprobe = nlist — the exact-oracle
     // searches): every cell is probed by construction, so the probe
@@ -675,13 +647,42 @@ object AnnIndex {
     spark.createDataFrame(rows.asJava, schema)
   }
 
-  /** The probe frame of the local route: the (id, vector) rows of a query
-    * frame of at most [[LocalSearchMaxQueries]] rows, or None when it is
-    * bigger or two probe-frame queries share a non-null id (the plan's
-    * per-id windows would pool them). */
+  /** The local route of one search over `targets` — one index, or every
+    * shard of a sharded one, all or none: Some(the output schema, each
+    * target's answer rows), or None when the search must take the
+    * distributed plan. The route is logged either way. */
+  private def localIvf(
+      spark: SparkSession, dir: String, targets: Seq[IvfTarget],
+      queries: DataFrame, queryIdCol: String, vecCol: String, k: Int,
+      corpusFilter: Option[org.apache.spark.sql.Column],
+      localMaxBytes: Long): Option[(StructType, Seq[Seq[Row]])] = {
+    val routed =
+      if (localMaxBytes <= 0) Left("bound 0")
+      else if (corpusFilter.isDefined) Left("corpus filter")
+      else if (targets.exists(_.m.quantized)) Left("quantized")
+      else if (targets.exists(t => hasTombstones(spark, t.dir))) Left("pending tombstones")
+      else targets.map(t => localSchema(spark, t.dir, t.m.idCol, queries, queryIdCol, vecCol))
+        .reduce((a, b) => a.flatMap(s => b.map(_ => s)))
+        .flatMap(schema => localSearch(spark, targets, queries, queryIdCol, vecCol, k, localMaxBytes)
+          .map { case (answers, summary) => (schema, answers, summary) })
+    routed match {
+      case Left(why) =>
+        log.info(s"ivf search $dir: route=distributed ($why)")
+        None
+      case Right((schema, answers, summary)) =>
+        log.info(s"ivf search $dir: route=local ($summary)")
+        Some((schema, answers))
+    }
+  }
+
+  /** The (id, vector) rows of a query frame of at most `maxRows` rows, as
+    * the probe frame of the local route, or None when it is bigger or two
+    * probe-frame queries share a non-null id (the plan's per-id windows
+    * would pool them). */
   private def probeQueries(
-      queries: DataFrame, queryIdCol: String, vecCol: String): Option[Seq[LocalIvf.Query]] =
-    graft.LocalGate.probe(queries.select(col(queryIdCol), col(vecCol)), LocalSearchMaxQueries)
+      queries: DataFrame, queryIdCol: String, vecCol: String,
+      maxRows: Int): Option[Seq[LocalIvf.Query]] =
+    graft.LocalGate.probe(queries.select(col(queryIdCol), col(vecCol)), maxRows)
       .map(LocalIvf.queries)
       .filter { qs => val ids = qs.map(_.id).filter(_ != null); ids.distinct.size == ids.size }
 
@@ -742,49 +743,61 @@ object AnnIndex {
       }
   }
 
-  /** The local route's answer rows, or Left(why not) when its pool — the
-    * on-disk bytes each query scans, the centroid table it ranks plus its
-    * probed cells, summed over queries — exceeds `localMaxBytes`. The
-    * centroid share is checked before the centroids are read. */
+  /** The local route's answer rows per target and a summary of what it
+    * read, or Left(why not). The pool — the on-disk bytes each query
+    * scans, every target's centroid table it ranks plus its probed cells,
+    * summed over queries — must stay within `localMaxBytes`. The centroid
+    * part files are listed first, so the query probe admits only as many
+    * rows as the bound holds centroid tables; the cells are read only
+    * once the whole pool fits. */
   private def localSearch(
-      spark: SparkSession, dir: String, idField: StructField,
-      qs: Seq[LocalIvf.Query], probes: Int, k: Int,
-      localMaxBytes: Long): Either[String, Seq[Row]] = {
+      spark: SparkSession, targets: Seq[IvfTarget],
+      queries: DataFrame, queryIdCol: String, vecCol: String, k: Int,
+      localMaxBytes: Long): Either[String, (Seq[Seq[Row]], String)] = {
     import graft.io.DriverParquet
-    val idCol = idField.name
+    import org.apache.hadoop.fs.Path
     val conf = spark.sparkContext.hadoopConfiguration
-    val corpus = new org.apache.hadoop.fs.Path(s"$dir/corpus.parquet")
-    val fs = corpus.getFileSystem(conf)
-    val centFiles = DriverParquet.partFiles(fs, new org.apache.hadoop.fs.Path(s"$dir/centroids.parquet"))
-    val rankBytes = qs.size * centFiles.map(_.getLen).sum
-    if (rankBytes > localMaxBytes) return Left(s"$rankBytes centroid bytes > bound $localMaxBytes")
-    val cents = centFiles.flatMap(f =>
-      DriverParquet.readColumns(conf, f.getPath, Seq("__cell", "__cent")).map(r =>
-        (r(0).asInstanceOf[Int], LocalIvf.doubles(r(1)))))
-    val probedBy = qs.map(q => q -> LocalIvf.probedCells(q, cents, probes))
-    val dirs = cellDirs(fs, corpus).toMap
-    val files = probedBy.flatMap(_._2).distinct.map(c =>
-      c -> dirs.get(c).map(DriverParquet.partFiles(fs, _)).getOrElse(Nil)).toMap
-    val cellBytes = files.map { case (c, fsts) => c -> fsts.map(_.getLen).sum }
-    val poolBytes = rankBytes + probedBy.map(_._2.map(cellBytes).sum).sum
-    val cells = files.size
+    val fs = new Path(targets.head.dir).getFileSystem(conf)
+    val centFiles = targets.map(t => DriverParquet.partFiles(fs, new Path(s"${t.dir}/centroids.parquet")))
+    val rankBytes = math.max(1L, centFiles.flatten.map(_.getLen).sum)
+    val maxQueries = math.min(localMaxBytes / rankBytes, Int.MaxValue - 1L).toInt
+    val probed = probeQueries(queries, queryIdCol, vecCol, maxQueries)
+    if (probed.isEmpty)
+      return Left(s"query frame over $maxQueries rows ($rankBytes centroid bytes a query) " +
+        "or ids not distinct")
+    val qs = probed.get
+    val plans = targets.zip(centFiles).map { case (t, cf) =>
+      val cents = cf.flatMap(f =>
+        DriverParquet.readColumns(conf, f.getPath, Seq("__cell", "__cent")).map(r =>
+          (r(0).asInstanceOf[Int], LocalIvf.doubles(r(1)))))
+      val probedBy = qs.map(q => q -> LocalIvf.probedCells(q, cents, t.probes))
+      val dirs = cellDirs(fs, new Path(s"${t.dir}/corpus.parquet")).toMap
+      val files = probedBy.flatMap(_._2).distinct.map(c =>
+        c -> dirs.get(c).map(DriverParquet.partFiles(fs, _)).getOrElse(Nil)).toMap
+      (t, probedBy, files)
+    }
+    val cells = plans.map(_._3.size).sum
+    val poolBytes = qs.size * rankBytes + plans.map { case (_, probedBy, files) =>
+      val cellBytes = files.map { case (c, fsts) => c -> fsts.map(_.getLen).sum }
+      probedBy.map(_._2.map(cellBytes).sum).sum
+    }.sum
     if (poolBytes > localMaxBytes)
-      Left(s"$cells probed cells, $poolBytes pool bytes > bound $localMaxBytes")
-    else {
+      return Left(s"$cells probed cells, $poolBytes pool bytes > bound $localMaxBytes")
+    var candidates = 0L
+    val answers = plans.map { case (t, probedBy, files) =>
       val rows = files.map { case (c, fsts) =>
-        c -> fsts.flatMap(f => DriverParquet.readColumns(conf, f.getPath, Seq(idCol, "__cv", "__cn")).map(r =>
+        c -> fsts.flatMap(f => DriverParquet.readColumns(conf, f.getPath, Seq(t.m.idCol, "__cv", "__cn")).map(r =>
           LocalIvf.Cand(r(0), LocalIvf.doubles(r(1)), r(2).asInstanceOf[java.lang.Double])))
       }
-      val answer = probedBy.flatMap { case (q, qCells) =>
+      candidates += probedBy.map(_._2.map(rows(_).size).sum).sum
+      probedBy.flatMap { case (q, qCells) =>
         val scored = qCells.flatMap(rows).filter(c => LocalIvf.distinctIds(c.id, q.id))
           .map(c => (c.id, LocalIvf.cosine(c, q)))
         LocalIvf.topK(scored, k).map { case (id, cos, rank) => Row(q.id, id, cos, rank) }
       }
-      val candidates = probedBy.map(_._2.map(rows(_).size).sum).sum
-      log.info(s"ivf search $dir: route=local ($cells probed cells, $candidates candidate rows, " +
-        s"$poolBytes pool bytes <= bound $localMaxBytes)")
-      Right(answer)
     }
+    Right((answers,
+      s"$cells probed cells, $candidates candidate rows, $poolBytes pool bytes <= bound $localMaxBytes"))
   }
 
   // --------------------------------------------------------------- IVF-PQ
@@ -1416,9 +1429,11 @@ object AnnIndex {
     * probed-cell set to push the partition-pruning literal) runs on S
     * concurrent threads — serially it was S driver round-trips of
     * latency; the scoring itself is one unioned Spark job either way.
-    * Each shard takes [[searchIvf]]'s route on its own (the query frame is
-    * probed once for all of them); when every shard answers on the
-    * driver, the merge does too and the result is a local relation. */
+    * A search the driver can answer for the whole index — [[searchIvf]]'s
+    * checks on every shard, one query probe, and one pool summed over all
+    * shards within [[LocalSearchMaxBytes]] — is answered and merged there
+    * and returned as a local relation; any other takes this fan-out
+    * unchanged. */
   def searchIvfSharded(
       spark: SparkSession,
       dir: String,
@@ -1431,7 +1446,8 @@ object AnnIndex {
     searchIvfShardedImpl(spark, dir, queries, queryIdCol, vecCol, k, nprobe, corpusFilter,
       LocalSearchMaxBytes)
 
-  /** [[searchIvfSharded]] with the per-shard local bound as a parameter. */
+  /** [[searchIvfSharded]] with its local bound as a parameter (0 forces
+    * the distributed fan-out and runs no probe). */
   private[graft] def searchIvfShardedImpl(
       spark: SparkSession,
       dir: String,
@@ -1443,17 +1459,16 @@ object AnnIndex {
       corpusFilter: Option[org.apache.spark.sql.Column],
       localMaxBytes: Long): DataFrame = {
     val m = readMeta(spark, dir, "ivf_sharded")
-    lazy val probed = probeQueries(queries, queryIdCol, vecCol)
-    val routed = fanOut(m.tables)(sh =>
-      searchIvfRouted(spark, s"$dir/shard=$sh", queries, queryIdCol, vecCol, k,
-        shardNprobe(spark, s"$dir/shard=$sh", "ivf", k, nprobe, m.tables),
-        corpusFilter, localMaxBytes, probed))
-    val merged = mergeShardTopK(
-      routed.map(_.fold(identity, { case (schema, rows) => localFrame(spark, schema, rows) })),
-      m.idCol, k)
-    if (routed.exists(_.isLeft)) merged
-    else localFrame(spark, merged.schema,
-      LocalIvf.mergeTopK(routed.flatMap(_.toOption.get._2), k))
+    val shards = (0 until m.tables).map { sh =>
+      val shardDir = s"$dir/shard=$sh"
+      ivfTarget(spark, shardDir, k, shardNprobe(spark, shardDir, "ivf", k, nprobe, m.tables))
+    }
+    localIvf(spark, dir, shards, queries, queryIdCol, vecCol, k, corpusFilter, localMaxBytes)
+      .map { case (schema, answers) => localFrame(spark, schema, LocalIvf.mergeTopK(answers.flatten, k)) }
+      .getOrElse(mergeShardTopK(
+        fanOut(m.tables)(sh =>
+          distributedSearch(spark, shards(sh), queries, queryIdCol, vecCol, k, corpusFilter)),
+        m.idCol, k))
   }
 
   /** Per-shard probe resolution for the SHARDED searches: explicit
@@ -1493,7 +1508,7 @@ object AnnIndex {
     * (each shard's probe resolution collects its probed-cell set — a
     * driver round-trip serially; the scoring itself is one unioned
     * Spark job either way). */
-  private def fanOut[T](nShards: Int)(one: Int => T): Seq[T] = {
+  private def fanOut(nShards: Int)(one: Int => DataFrame): Seq[DataFrame] = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     val pool = java.util.concurrent.Executors

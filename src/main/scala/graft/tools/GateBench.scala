@@ -19,14 +19,16 @@ import graft.similarity.AnnIndex
   *    cap. Sizes are rows; defaults 116508,116509 / 3996,4000, each the
   *    largest frame the default bound admits and the smallest it rejects.
   *  - `ivf`: `AnnIndex.searchIvfImpl` over a seeded index of gaussian
-  *    vectors at exhaustive probes (nlist 16), so every query's pool is the
-  *    centroid table and the whole corpus — `AnnIndex.LocalSearchMaxBytes`.
-  *    Sizes are query counts: the most whose pool fits the bound, and one
-  *    more, which falls through after the probe (its "gated" runs include
-  *    that cost).
+  *    vectors, and `AnnIndex.searchIvfShardedImpl` over the same vectors
+  *    in 3 shards, at exhaustive probes (nlist 16 per index), so every
+  *    query's pool is the centroid tables and the whole corpus —
+  *    `AnnIndex.LocalSearchMaxBytes`, or the bound given. Sizes are query
+  *    counts: the most whose pool fits the bound, and one more, which
+  *    falls through after the probe (its "gated" runs include that
+  *    cost).
   *
   * Usage: runMain graft.tools.GateBench [lr|ivf|all] [reps]
-  *          [lr: train rows,... cv rows,...] [ivf: vectors,... dims]
+  *          [lr: train rows,... cv rows,...] [ivf: vectors,... dims bound]
   * (ivf defaults: 8000,28000 vectors of 64 dims — a scoring-bound and a
   * read-bound pool at the 8 MB bound). */
 object GateBench {
@@ -60,8 +62,9 @@ object GateBench {
       if (what == "ivf" || what == "all") {
         val ivfArgs = if (what == "ivf") args.drop(2) else Array.empty[String]
         val dims = ivfArgs.lift(1).map(_.toInt).getOrElse(64)
-        ivfArgs.lift(0).getOrElse("8000,28000").split(",").map(_.toInt)
-          .foreach(ivf(spark, _, dims, bench))
+        val bound = ivfArgs.lift(2).map(_.toLong).getOrElse(AnnIndex.LocalSearchMaxBytes)
+        for (n <- ivfArgs.lift(0).getOrElse("8000,28000").split(",").map(_.toInt); sharded <- Seq(false, true))
+          ivf(spark, n, dims, sharded, bound, bench)
       }
     } finally spark.stop()
   }
@@ -91,33 +94,40 @@ object GateBench {
     }
   }
 
-  private def ivf(spark: SparkSession, n: Int, dims: Int, bench: Bench): Unit = {
+  private def ivf(
+      spark: SparkSession, n: Int, dims: Int, sharded: Boolean, gatedBound: Long, bench: Bench): Unit = {
     val dir = java.nio.file.Files.createTempDirectory("graft_gate_ivf").toString
     def vectors(ids: Long, from: Long, seed: Long): DataFrame = spark.range(from, from + ids)
       .select(col("id").as("vec_id"),
         array((0 until dims).map(j => randn(seed + j).cast("float")): _*).as("embedding"))
-    AnnIndex.buildIvf(vectors(n, 0L, 1000L), "vec_id", "embedding", dir, nlist = 16, seed = 1L)
-    // each query's pool: the centroid table it ranks and every cell
+    if (sharded) AnnIndex.buildIvfSharded(vectors(n, 0L, 1000L), "vec_id", "embedding", dir,
+      nShards = 3, nlist = 16, seed = 1L)
+    else AnnIndex.buildIvf(vectors(n, 0L, 1000L), "vec_id", "embedding", dir, nlist = 16, seed = 1L)
+    // each query's pool: the centroid tables it ranks and every cell
     var queryBytes = 0L
-    for (table <- Seq("centroids.parquet", "corpus.parquet")) {
-      val p = new org.apache.hadoop.fs.Path(s"$dir/$table")
-      val files = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
-      while (files.hasNext) {
-        val f = files.next()
-        if (f.getPath.getName.startsWith("part-")) queryBytes += f.getLen
-      }
+    val files = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listFiles(new org.apache.hadoop.fs.Path(dir), true)
+    while (files.hasNext) {
+      val f = files.next()
+      val tables = f.getPath.toString.contains("/centroids.parquet/") || f.getPath.toString.contains("/corpus.parquet/")
+      if (tables && f.getPath.getName.startsWith("part-")) queryBytes += f.getLen
     }
-    val under = math.max(1L, AnnIndex.LocalSearchMaxBytes / queryBytes)
-    println(s"""{"op": "ivf", "vectors": $n, "dims": $dims, "pool_bytes_per_query": $queryBytes, "bound": ${AnnIndex.LocalSearchMaxBytes}}""")
+    val op = if (sharded) "ivf_sharded" else "ivf"
+    val under = math.max(1L, gatedBound / queryBytes)
+    println(s"""{"op": "$op", "vectors": $n, "dims": $dims, "pool_bytes_per_query": $queryBytes, "bound": $gatedBound}""")
     for (nq <- Seq(under, under + 1)) {
       val queries = vectors(nq, 1L << 40, 5000L).persist()
       queries.count()
-      bench("ivf", nq, AnnIndex.LocalSearchMaxBytes) { bound =>
-        val df = AnnIndex.searchIvfImpl(spark, dir, queries, "vec_id", "embedding", 10, 16, None, bound)
+      bench(op, nq, gatedBound) { bound =>
+        val df =
+          if (sharded) AnnIndex.searchIvfShardedImpl(spark, dir, queries, "vec_id", "embedding", 10, 16, None, bound)
+          else AnnIndex.searchIvfImpl(spark, dir, queries, "vec_id", "embedding", 10, 16, None, bound)
         df.collect()
         df.queryExecution.analyzed.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
       }
       queries.unpersist(true)
     }
+    val root = new org.apache.hadoop.fs.Path(dir)
+    root.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(root, true)
   }
 }

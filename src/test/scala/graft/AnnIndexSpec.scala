@@ -1385,7 +1385,7 @@ class AnnIndexSpec extends SparkSpec {
     }
   }
 
-  test("local IVF search falls through: quantized, tombstones, corpus filter, one pool byte over") {
+  test("local IVF search falls through: quantized, tombstones, corpus filter, one pool byte over, sharded") {
     import spark.implicits._
     val (corpus, queries) = gateFixture("long")
     val dir = tempDir("graft_ivf_gate_fall")
@@ -1394,9 +1394,9 @@ class AnnIndexSpec extends SparkSpec {
       AnnIndex.searchIvfImpl(spark, d, queries, "vec_id", "embedding", 5, 8, filter, bound)
     // exhaustive probes: every nonzero query's pool is the centroid table
     // it ranks plus the whole corpus
-    def bytes(table: String) = {
+    def bytes(table: String, index: String = dir) = {
       import org.apache.hadoop.fs.Path
-      val p = new Path(s"$dir/$table")
+      val p = new Path(s"$index/$table")
       val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
       var n = 0L
       while (it.hasNext) { val f = it.next(); if (f.getPath.getName.startsWith("part-")) n += f.getLen }
@@ -1407,6 +1407,19 @@ class AnnIndexSpec extends SparkSpec {
     val over = run(dir, pool - 1)
     assert(!isLocal(over), "a pool one byte over the bound takes the plan")
     assertSameAnswer(run(dir, pool), over, "at vs over the bound")
+    // a sharded index is one pool summed over its shards, local all or
+    // none: one byte under the sum, every shard takes the plan
+    val sh = tempDir("graft_ivf_gate_fall_sh")
+    AnnIndex.buildIvfSharded(corpus, "vec_id", "embedding", sh, nShards = 3, nlist = 4, seed = 3L)
+    def runSharded(bound: Long) =
+      AnnIndex.searchIvfShardedImpl(spark, sh, queries, "vec_id", "embedding", 5, 4, None, bound)
+    val shardPools = (0 until 3).map(i =>
+      9 * (bytes("centroids.parquet", s"$sh/shard=$i") + bytes("corpus.parquet", s"$sh/shard=$i")))
+    assert(isLocal(runSharded(shardPools.sum)), "a sharded pool at the bound stays local")
+    val shardedOver = runSharded(shardPools.sum - 1)
+    assert(shardPools.max < shardPools.sum - 1 && !isLocal(shardedOver),
+      "a sharded pool one byte over the bound takes the plan on every shard")
+    assertSameAnswer(runSharded(shardPools.sum), shardedOver, "sharded, at vs over the bound")
     val filtered = run(dir, pool, Some(col("vec_id") > 20L))
     assert(!isLocal(filtered))
     assert(filtered.collect().forall(_.getLong(1) > 20L))
