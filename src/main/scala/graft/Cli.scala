@@ -21,9 +21,13 @@ object Cli {
     require(args.contains("job") && args.contains("run"), "expected subcommand: job run")
 
     Production.registerAll()
-    val ctx = Context.fromConfigFile(configPath)
-    val failures = Jobs.run(ctx, jobName)
-    ctx.spark.stop()
+    // plan against the config alone: a catalog mistake exits before any
+    // SparkSession starts
+    val conf = Context(Context.loadConfig(configPath), null)
+    val failures = Jobs.planned(conf, jobName).fold(identity, { plans =>
+      val ctx = conf.copy(spark = Context.session(conf.config))
+      try Jobs.execute(ctx, plans) finally ctx.spark.stop()
+    })
     if (failures.nonEmpty) {
       System.err.println(s"[graft] ${failures.size} task(s) failed: ${failures.mkString(", ")}")
       sys.exit(1)

@@ -70,6 +70,7 @@ object Preference {
     * bounded-heap top-1 aggregate (shuffle = one row per prompt per
     * side); `all`/`best-vs-rest` join back on the prompt key, bounded
     * by the per-prompt sample count N (a generation-time constant). */
+  val PairPolicies: Seq[String] = Seq("max-min", "best-vs-rest", "all")
   def preferencePairs(
       responses: DataFrame,
       promptCol: String,
@@ -118,7 +119,7 @@ object Preference {
             Seq(promptCol)))
       case other =>
         throw new IllegalArgumentException(
-          s"unknown policy '$other' (max-min | best-vs-rest | all)")
+          s"unknown policy '$other' (${PairPolicies.mkString(" | ")})")
     }
   }
 

@@ -91,27 +91,31 @@ object Context {
   }
 
   /** Load config.yml + the catalog files it names (relative to its dir),
-    * merge, interpolate, and build the session with `Sessions.local`, folding
-    * `core.app_name` and then `core.spark_conf` over its defaults — so a
-    * `spark.master` entry there overrides the local master. */
-  def fromConfigFile(configPath: String): Context = {
+    * merge and interpolate — no SparkSession. */
+  def loadConfig(configPath: String): Map[String, Any] = {
     val confDir = new java.io.File(configPath).getAbsoluteFile.getParent
     val base = loadYaml(configPath)
     def layer(name: String): Map[String, Any] =
       dig(base, s"catalogs.$name")
         .map(p => loadYaml(s"$confDir/${p.toString}"))
         .getOrElse(Map.empty)
-    val merged = interpolate(
+    interpolate(
       base ++ Map(
         "data_catalog" -> layer("data_catalog"),
         "job_catalog" -> layer("job_catalog"),
         "log_catalog" -> layer("log_catalog"),
         "core" -> (dig(base, "core").map(_.asInstanceOf[Map[String, Any]]).getOrElse(Map.empty) ++ layer("core"))))
-    val sparkConf = dig(merged, "core.spark_conf")
+  }
+
+  /** The session for a loaded config: `Sessions.local` with `core.app_name`
+    * and then `core.spark_conf` folded over its defaults — so a
+    * `spark.master` entry there overrides the local master. */
+  def session(config: Map[String, Any]): SparkSession = {
+    val sparkConf = dig(config, "core.spark_conf")
       .map(_.asInstanceOf[Map[String, Any]])
       .getOrElse(Map.empty)
       .map { case (k, v) => k -> v.toString }
-    val appName = dig(merged, "core.app_name").map(n => "spark.app.name" -> n.toString)
-    Context(merged, graft.Sessions.local(extra = appName.toMap ++ sparkConf))
+    val appName = dig(config, "core.app_name").map(n => "spark.app.name" -> n.toString)
+    graft.Sessions.local(extra = appName.toMap ++ sparkConf)
   }
 }

@@ -44,6 +44,7 @@ object Bpe {
     * mode is exact including whitespace, not whitespace-normalized. */
   val Whitespace = "whitespace"
   val Gpt2 = "gpt2"
+  val PreTokenizeModes: Seq[String] = Seq(Whitespace, Gpt2)
 
   /** The GPT-2 pre-tokenization pattern, with one disclosed divergence
     * from the original: the trailing-whitespace alternative `\s+(?!\S)`
@@ -64,7 +65,7 @@ object Bpe {
     case Gpt2       => regexp_extract_all(col(textCol), lit(Gpt2Pattern), lit(0))
     case other =>
       throw new IllegalArgumentException(
-        s"unknown preTokenize mode '$other' (expected '$Whitespace' or '$Gpt2')")
+        s"unknown preTokenize mode '$other' (expected ${PreTokenizeModes.mkString(" | ")})")
   }
 
   private def wordsOf(textCol: String): org.apache.spark.sql.Column =

@@ -39,8 +39,11 @@ class ConfigJobsSpec extends AnyFunSuite {
               Map("name" -> "bad-task"))))))),
       "log_catalog" -> Map("tracking" -> Map("path" -> log)))
     val ctx = Context(cfg, null)
-    graft.pipeline.Jobs.register("tjob", "ok-task")((_, _) => ())
-    graft.pipeline.Jobs.register("tjob", "bad-task")((_, _) => throw new RuntimeException("boom"))
+    graft.pipeline.Jobs.register("tjob", "ok-task") { p =>
+      p.int("alpha", 0); p.str("mode", "slow"); p.str("note", "")
+      _ => ()
+    }
+    graft.pipeline.Jobs.register("tjob", "bad-task")(_ => _ => throw new RuntimeException("boom"))
     val failures = graft.pipeline.Jobs.run(ctx, "tjob")
     assert(failures == Seq(("tjob", "tstage", "bad-task")))
     val lines = java.nio.file.Files.readAllLines(java.nio.file.Paths.get(log))
@@ -57,7 +60,7 @@ class ConfigJobsSpec extends AnyFunSuite {
     val spark = SparkSpec.session
     val work = java.nio.file.Files.createTempDirectory("graft-propensity").toString
     // core.spark_conf is not applied: Context(cfg, spark) reuses the shared
-    // test session, where fromConfigFile would build one from the config
+    // test session, where Context.session would build one from the config
     val dataCatalog = Context.loadYaml("conf/data_catalog/local.yml")
     val cfg = Context.interpolate(Map(
       "job_catalog" -> Context.loadYaml("conf/job_catalog/local.yml"),
@@ -87,9 +90,9 @@ class ConfigJobsSpec extends AnyFunSuite {
             "tasks" -> List(
               Map("name" -> "t1"), Map("name" -> "boom"), Map("name" -> "t3"))))))))
     val ctx = Context(cfg, null)
-    graft.pipeline.Jobs.register("ffjob", "t1")((_, _) => ran += "t1")
-    graft.pipeline.Jobs.register("ffjob", "boom")((_, _) => throw new RuntimeException("x"))
-    graft.pipeline.Jobs.register("ffjob", "t3")((_, _) => ran += "t3")
+    graft.pipeline.Jobs.register("ffjob", "t1")(_ => _ => ran += "t1")
+    graft.pipeline.Jobs.register("ffjob", "boom")(_ => _ => throw new RuntimeException("x"))
+    graft.pipeline.Jobs.register("ffjob", "t3")(_ => _ => ran += "t3")
     val failures = graft.pipeline.Jobs.run(ctx, "ffjob")
     assert(failures.map(_._3) == Seq("boom"))
     assert(ran.toSeq == Seq("t1"), s"t3 must not run after a fail_fast failure; ran $ran")
@@ -1432,30 +1435,33 @@ class ConfigJobsSpec extends AnyFunSuite {
       // curly bracket -> drops
       (4L, "A brace appears x in this text.\nA second sentence follows the brace { here."))
       .toDF("doc_id", "text").write.mode("overwrite").parquet(s"$work/docs")
-    val yml = java.nio.file.Files.createTempFile("graft-c4-jobs", ".yml")
-    java.nio.file.Files.writeString(yml,
-      """jobs:
-        |  - name: corpus-curation
-        |    fail_fast: true
-        |    stages:
-        |      - name: gate
-        |        tasks:
-        |          - name: c4-filter
-        |            params: {min_sentences: 2, bad_words: "badwordx"}
-        |""".stripMargin)
-    val cfg = Map(
-      "core" -> Map("seed" -> 7),
-      "job_catalog" -> Context.loadYaml(yml.toString),
-      "data_catalog" -> Map(
-        "raw" -> Map("documents" -> s"$work/docs"),
-        "clean" -> Map("documents_c4" -> s"$work/kept")))
-    graft.pipeline.Production.registerAll()
-    assert(graft.pipeline.Jobs.run(ctx = Context(cfg, spark), "corpus-curation").isEmpty)
-    val kept = spark.read.parquet(s"$work/kept")
-      .select("doc_id", "text").as[(Long, String)].collect().toMap
-    assert(kept.keySet === Set(1L), s"got ${kept.keySet}")
-    // the surviving page's text is REWRITTEN to its surviving lines
-    assert(kept(1L) === "One good sentence sits here.\nA second good sentence follows.")
+    // bad_words as one comma-separated string and as a YAML list
+    for ((badWords, i) <- Seq("\"badwordx\"", "[badwordx]").zipWithIndex) {
+      val yml = java.nio.file.Files.createTempFile("graft-c4-jobs", ".yml")
+      java.nio.file.Files.writeString(yml,
+        s"""jobs:
+          |  - name: corpus-curation
+          |    fail_fast: true
+          |    stages:
+          |      - name: gate
+          |        tasks:
+          |          - name: c4-filter
+          |            params: {min_sentences: 2, bad_words: $badWords}
+          |""".stripMargin)
+      val cfg = Map(
+        "core" -> Map("seed" -> 7),
+        "job_catalog" -> Context.loadYaml(yml.toString),
+        "data_catalog" -> Map(
+          "raw" -> Map("documents" -> s"$work/docs"),
+          "clean" -> Map("documents_c4" -> s"$work/kept$i")))
+      graft.pipeline.Production.registerAll()
+      assert(graft.pipeline.Jobs.run(ctx = Context(cfg, spark), "corpus-curation").isEmpty)
+      val kept = spark.read.parquet(s"$work/kept$i")
+        .select("doc_id", "text").as[(Long, String)].collect().toMap
+      assert(kept.keySet === Set(1L), s"bad_words: $badWords got ${kept.keySet}")
+      // the surviving page's text is REWRITTEN to its surviving lines
+      assert(kept(1L) === "One good sentence sits here.\nA second good sentence follows.")
+    }
   }
   test("sample-mix catalog stage: unimax strategy water-fills and tags epochs") {
     val spark = SparkSpec.session
@@ -2317,7 +2323,117 @@ class ConfigJobsSpec extends AnyFunSuite {
     assert(stored.count() === stored.distinct().count(),
       "replays must not accumulate duplicate vec_ids in the stored layout")
   }
+
+  test("Params: one coercion, list and choice rule; every mistake reported with the known keys") {
+    val p = new graft.pipeline.Params(Map(
+      "a" -> 50, "b" -> "7", "xs" -> List("x", " y "), "ys" -> "1, 2,,3",
+      "bad" -> "abc", "algo" -> "nope", "typo" -> 1))
+    assert(p.int("a", 0) == 50 && p.long("b", 0L) == 7L && p.double("b", 0.0) == 7.0)
+    assert(p.strs("xs", Nil) == Seq("x", "y") && p.ints("ys", Nil) == Seq(1, 2, 3))
+    assert(p.int("absent", 9) == 9 && p.optStr("absent2").isEmpty)
+    assert(p.int("bad", 5) == 5, "a bad value reads as its default until check() reports it")
+    assert(p.choice("algo", "bpe", Seq("bpe", "unigram")) == "bpe")
+    val e = intercept[IllegalArgumentException](p.check())
+    Seq("bad: expected an int, got 'abc'", "algo: expected one of bpe | unigram, got 'nope'",
+      "typo: unknown param", "known params: a (0), b (0), xs (), ys (), absent (9)")
+      .foreach(m => assert(e.getMessage.contains(m), e.getMessage))
+    // a YAML list or mapping is not a scalar
+    val q = new graft.pipeline.Params(Map("n" -> List(1), "m" -> Map("k" -> 1)))
+    q.int("n", 0); q.str("m", "")
+    assert(intercept[IllegalArgumentException](q.check()).getMessage.contains("n: expected an int"))
+    // a missing required key stops the parse
+    val r = new graft.pipeline.Params(Map.empty)
+    assert(intercept[IllegalArgumentException](r.required("n_shards")(r.optInt))
+      .getMessage == "n_shards: required")
+  }
+
+  test("a typo'd key, a bad value and an unknown choice fail at plan time: no task runs, each error names the stage") {
+    val spark = SparkSpec.session
+    import spark.implicits._
+    val work = java.nio.file.Files.createTempDirectory("graft-plan-errors").toString
+    Seq((1L, "the cat sat on the mat and that was that")).toDF("doc_id", "text")
+      .write.mode("overwrite").parquet(s"$work/docs")
+    val log = s"$work/run_log.jsonl"
+    val yml = java.nio.file.Files.createTempFile("graft-plan-errors", ".yml")
+    java.nio.file.Files.writeString(yml,
+      """jobs:
+        |  - name: corpus-curation
+        |    stages:
+        |      - name: valid
+        |        tasks:
+        |          - name: gopher-filter
+        |            params: {min_words: 5}
+        |      - name: typo
+        |        tasks:
+        |          - name: gopher-filter
+        |            params: {min_word: 5}
+        |      - name: bad-value
+        |        tasks:
+        |          - name: gopher-filter
+        |            params: {min_words: abc}
+        |  - name: model-gen
+        |    stages:
+        |      - name: training
+        |        tasks:
+        |          - name: train
+        |            params: {model: logistic_regresion}
+        |""".stripMargin)
+    val cfg = Map(
+      "job_catalog" -> Context.loadYaml(yml.toString),
+      "log_catalog" -> Map("tracking" -> Map("path" -> log)),
+      "data_catalog" -> Map(
+        "raw" -> Map("documents" -> s"$work/docs"),
+        "clean" -> Map("documents_gopher" -> s"$work/kept")))
+    graft.pipeline.Production.registerAll()
+    val failures = graft.pipeline.Jobs.run(Context(cfg, spark), "all")
+    assert(failures == Seq(
+      ("corpus-curation", "typo", "gopher-filter"),
+      ("corpus-curation", "bad-value", "gopher-filter"),
+      ("model-gen", "training", "train")), failures.toString)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$work/kept")),
+      "the valid first task must not run when a later task fails to plan")
+    val lines = java.nio.file.Files.readAllLines(java.nio.file.Paths.get(log))
+    assert(lines.size() == 3 && !lines.toString.contains("\"status\":\"ok\""), lines.toString)
+    val errors = (0 until 3).map(i =>
+      new com.fasterxml.jackson.databind.ObjectMapper().readTree(lines.get(i)).get("error").asText())
+    assert(errors(0).contains("min_word: unknown param"), errors(0))
+    assert(errors(1).contains("min_words: expected an int, got 'abc'"), errors(1))
+    assert(errors(2).startsWith("model-gen/train: model: expected one of " +
+      "aft_survival_regression | decision_tree_classifier"), errors(2))
+    errors.take(2).foreach { e =>
+      assert(e.startsWith("corpus-curation/gopher-filter: "), e)
+      assert(e.contains("known params: input (raw.documents), min_words (50), " +
+        "max_words (100000), repetition (false), output (clean.documents_gopher)"), e)
+    }
+  }
+
+  test("a missing required key fails at plan time naming the stage and the key") {
+    val cfg = Map("job_catalog" -> Map("jobs" -> List(
+      Map("name" -> "ann-serving", "stages" -> List(Map("name" -> "grow", "tasks" -> List(
+        Map("name" -> "reshard", "params" -> Map("nlist" -> 4)))))),
+      Map("name" -> "corpus-curation", "stages" -> List(Map("name" -> "crawl", "tasks" -> List(
+        Map("name" -> "crawl-ingest"))))))))
+    graft.pipeline.Production.registerAll()
+    val e = intercept[graft.pipeline.Jobs.PlanException](
+      graft.pipeline.Jobs.plan(Context(cfg, null), "all"))
+    assert(e.errors.map(_.message) == Seq(
+      "ann-serving/reshard: n_shards: required",
+      "corpus-curation/crawl-ingest: input_paths: required"), e.getMessage)
+  }
+
+  test("the shipped catalog plans without Spark, and every registered stage parses on empty params") {
+    graft.pipeline.Production.registerAll()
+    val plans = graft.pipeline.Jobs.plan(Context(Context.loadConfig("conf/config.yml"), null), "all")
+    assert(plans.flatMap(_.stages).flatMap(_.tasks).size == 23)
+    // the stages no catalog test runs are covered here: each parse phase
+    // succeeds on empty params, or names its required key
+    val required = graft.pipeline.Jobs.registered.flatMap { case (job, task) =>
+      try { graft.pipeline.Jobs.parse(job, task, Map.empty); None }
+      catch { case e: IllegalArgumentException => Some(e.getMessage) }
+    }
+    assert(required.toSet == Set(
+      "ann-serving/reshard: n_shards: required",
+      "corpus-curation/crawl-ingest: input_paths: required"), required.toString)
+    assert(graft.pipeline.Jobs.registered.size >= 85)
+  }
 }
-
-
-
