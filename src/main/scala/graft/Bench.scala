@@ -70,26 +70,11 @@ object Bench {
     // stage-level IO accounting: shuffle read/write + disk spill bytes per
     // query (the "did this plan shuffle more than it had to" number the
     // scale notes argue from — measured, not guessed)
-    object metrics extends org.apache.spark.scheduler.SparkListener {
-      private val sr = new java.util.concurrent.atomic.AtomicLong
-      private val sw = new java.util.concurrent.atomic.AtomicLong
-      private val sp = new java.util.concurrent.atomic.AtomicLong
-      override def onStageCompleted(
-          s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val m = s.stageInfo.taskMetrics
-        if (m != null) {
-          sr.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-          sw.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          sp.addAndGet(m.diskBytesSpilled)
-        }
-      }
-      def reset(): Unit = { sr.set(0); sw.set(0); sp.set(0) }
-      def snapshot(): (Long, Long, Long) = (sr.get, sw.get, sp.get)
-    }
     // SPARK_GRAFT_IO_METRICS=0 opts out of IO accounting entirely (no
     // listener registered, no bus drain) — the control arm for verifying
     // the accounting itself never distorts the timings it annotates
     val ioMetrics = sys.env.getOrElse("SPARK_GRAFT_IO_METRICS", "1") != "0"
+    var telemetry: Option[graft.obs.Telemetry] = None
 
     // Session lifecycle: the r11 run proved that one long-lived session
     // over 178 queries contaminates measurement — plans with byte-identical
@@ -103,7 +88,7 @@ object Bench {
       // Sessions.local's reliable checkpoint dir keeps localCheckpoint
       // blocks (and their unpersist warnings) from accumulating mid-bench
       val spark = Sessions.local(cpus)
-      if (ioMetrics) spark.sparkContext.addSparkListener(metrics)
+      telemetry = if (ioMetrics) Some(graft.obs.Telemetry.attach(spark)) else None
       // session warm-up: one tiny end-to-end job (scan, shuffle, agg)
       // absorbs class-loading / codegen / scheduler start-up costs.
       try spark.read.parquet(s"$sfDir/region.parquet").groupBy("r_name").count().count()
@@ -156,16 +141,15 @@ object Bench {
         System.gc() // drop the previous query's garbage outside the timers
         try {
           var lastIO = (0L, 0L, 0L)
-          def measure(): (Double, Long) = {
-            metrics.reset()
-            val t0 = System.nanoTime()
-            val rows = fn(spark, sfDir).count()
-            val t = (System.nanoTime() - t0) / 1e9
-            if (ioMetrics) {
-              org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext)
-              lastIO = metrics.snapshot()
-            }
-            (t, rows)
+          def measure(): (Double, Long) = telemetry match {
+            case Some(t) =>
+              val (rows, rec) = t.measure(fn(spark, sfDir).count())
+              lastIO = (rec.shuffleRead, rec.shuffleWrite, rec.spilled)
+              (rec.sec, rows)
+            case None =>
+              val t0 = System.nanoTime()
+              val rows = fn(spark, sfDir).count()
+              ((System.nanoTime() - t0) / 1e9, rows)
           }
           val (cold0, n) = measure()
           val io0 = lastIO

@@ -1,5 +1,6 @@
 package graft.dp
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -39,6 +40,12 @@ object IncrementalAgg {
     * state intact. `batchId` makes replays idempotent: a batch at or below
     * the last folded id is skipped (the at-least-once delivery of
     * checkpointed streaming restarts would otherwise double-count).
+    * `tag` says how the state was built (say, the tokenizer's pre-tokenize
+    * mode). The fold that creates the state stores it inside the same
+    * swap; every later fold must carry the same tag or fails before it
+    * writes, and [[stateTag]] reads it back. A state created without a tag
+    * stays untagged: the batches already in it could have been built any
+    * way.
     * Cost per fold: O(|state| + |batch|) — never the history. */
   def foldStateDir(
       spark: org.apache.spark.sql.SparkSession,
@@ -49,10 +56,14 @@ object IncrementalAgg {
       // the swap protocol is state-schema-agnostic: the default folds this
       // object's n/sum/min/max frames; QuantileState.mergeQuantileSketches
       // plugs in GK quantile state, mergeDistinctSketches HLL state
-      merge: (DataFrame, DataFrame, String) => DataFrame = mergeStates): Unit = {
-    import org.apache.hadoop.fs.Path
+      merge: (DataFrame, DataFrame, String) => DataFrame = mergeStates,
+      tag: Option[String] = None): Unit = {
     val dir = new Path(statePath)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def write(p: Path, text: String): Unit = {
+      val out = fs.create(p, true)
+      try out.write(text.getBytes("UTF-8")) finally out.close()
+    }
     // the batch-id marker lives INSIDE the state directory (underscore
     // prefix — parquet readers skip it), so marker and state arrive in
     // the SAME atomic rename. A marker written after the swap would leave
@@ -61,27 +72,24 @@ object IncrementalAgg {
     // the batch.
     def markerIn(d: Path) = new Path(d, "_graft_batch_id")
     val legacyMarker = new Path(statePath + ".batchid")
-    def readMarker(p: Path): Option[Long] =
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        try Some(scala.io.Source.fromInputStream(in).mkString.trim.toLong)
-        finally in.close()
-      }
+    def readMarker(p: Path): Option[Long] = readText(fs, p).map(_.toLong)
     if (batchId != Long.MinValue) {
       val last = readMarker(markerIn(dir)).orElse(readMarker(legacyMarker))
       if (last.exists(batchId <= _)) return // replayed batch — already folded
     }
+    val exists = fs.exists(dir)
+    val had = if (exists) readText(fs, tagIn(dir)) else None
+    if (had.isDefined && tag != had)
+      throw new IllegalArgumentException(
+        s"foldStateDir: $statePath is tagged ${had.get}; this batch is tagged ${tag.getOrElse("(none)")}")
     val merged =
-      if (fs.exists(dir)) merge(spark.read.parquet(statePath), batchState, keyCol)
+      if (exists) merge(spark.read.parquet(statePath), batchState, keyCol)
       else batchState
     val tmp = new Path(statePath + ".tmp")
     fs.delete(tmp, true)
     merged.write.mode("overwrite").parquet(tmp.toString)
-    if (batchId != Long.MinValue) {
-      val out = fs.create(markerIn(tmp), true)
-      try out.write(batchId.toString.getBytes("UTF-8")) finally out.close()
-    }
+    if (batchId != Long.MinValue) write(markerIn(tmp), batchId.toString)
+    (if (exists) had else tag).foreach(write(tagIn(tmp), _))
     // Hadoop rename signals failure by returning FALSE, not throwing —
     // an unchecked rename could delete the only surviving state copy
     val old = new Path(statePath + ".old")
@@ -97,6 +105,20 @@ object IncrementalAgg {
     // migration: drop a legacy side-car marker so it can't shadow the
     // in-directory one on older state dirs
     fs.delete(new Path(statePath + ".batchid"), false)
+  }
+
+  private def tagIn(d: Path) = new Path(d, "_graft_tag")
+
+  private def readText(fs: FileSystem, p: Path): Option[String] =
+    Option.when(fs.exists(p)) {
+      val in = fs.open(p)
+      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim finally in.close()
+    }
+
+  /** The tag [[foldStateDir]] stored with the state, if any. */
+  def stateTag(spark: org.apache.spark.sql.SparkSession, statePath: String): Option[String] = {
+    val dir = new Path(statePath)
+    readText(dir.getFileSystem(spark.sparkContext.hadoopConfiguration), tagIn(dir))
   }
 
   /** One batch's per-key DISTINCT-count state: an HLL sketch of the value

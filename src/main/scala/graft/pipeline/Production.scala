@@ -1154,14 +1154,9 @@ object Production {
       val pre = preTokenize(p)
       val batchId = p.long("batch_id", Long.MinValue)
       ctx =>
-        val s = ctx.spark
-        val batch = Tables.readData(s, Seq(ctx.dataPath("raw.documents")))
-        graft.dp.IncrementalAgg.foldStateDir(
-          s, ctx.dataPath("models.word_counts"),
-          graft.text.Bpe.wordCountState(batch, textCol, pre),
-          "word",
-          batchId = batchId,
-          merge = graft.text.Bpe.mergeWordCounts)
+        graft.text.Bpe.foldWordCounts(
+          Tables.readData(ctx.spark, Seq(ctx.dataPath("raw.documents"))),
+          textCol, ctx.dataPath("models.word_counts"), batchId, pre)
     }
 
     // `algo: bpe` (default) persists merges + vocab; `algo: unigram`
@@ -1186,7 +1181,7 @@ object Production {
         val s = ctx.spark
         val counts: Seq[(String, Long)] =
           if (fromState)
-            graft.text.Bpe.countsFromState(s, ctx.dataPath("models.word_counts"), maxWords)
+            graft.text.Bpe.countsFromState(s, ctx.dataPath("models.word_counts"), maxWords, pre)
           else graft.text.Bpe.cappedWordCounts(
             Tables.readData(s, Seq(ctx.dataPath("raw.documents"))), textCol, maxWords, pre)
         algo match {

@@ -279,13 +279,7 @@ object Streaming {
     docs.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.dp.IncrementalAgg.foldStateDir(
-          batch.sparkSession,
-          statePath,
-          graft.text.Bpe.wordCountState(batch, textCol),
-          "word",
-          batchId,
-          merge = graft.text.Bpe.mergeWordCounts)
+        graft.text.Bpe.foldWordCounts(batch, textCol, statePath, batchId)
       }
       .start()
 

@@ -154,18 +154,40 @@ object Bpe {
   def mergeWordCounts(a: DataFrame, b: DataFrame, keyCol: String = "word"): DataFrame =
     a.unionByName(b).groupBy(col(keyCol)).agg(sum(col("n")).as("n"))
 
+  /** Fold one batch's [[wordCountState]] into the state directory at
+    * `statePath` ([[graft.dp.IncrementalAgg.foldStateDir]], replay-safe by
+    * `batchId`). The state records the pre-tokenize mode it was created
+    * under, in the same atomic swap; a fold under another mode is refused,
+    * since its words are split differently. */
+  def foldWordCounts(
+      batch: DataFrame,
+      textCol: String,
+      statePath: String,
+      batchId: Long = Long.MinValue,
+      preTokenize: String = Whitespace): Unit =
+    graft.dp.IncrementalAgg.foldStateDir(
+      batch.sparkSession, statePath, wordCountState(batch, textCol, preTokenize), "word",
+      batchId, merge = mergeWordCounts, tag = Some(preTokenize))
+
   /** The capped (word, count) table from a maintained state directory —
-    * [[cappedWordCounts]] without touching any raw text. */
+    * [[cappedWordCounts]] without touching any raw text. Fails when the
+    * state was folded under a pre-tokenize mode other than `preTokenize`;
+    * a state folded before modes were recorded is not checked. */
   def countsFromState(
       spark: SparkSession,
       statePath: String,
-      maxWords: Int = 50000): Seq[(String, Long)] =
+      maxWords: Int = 50000,
+      preTokenize: String = Whitespace): Seq[(String, Long)] = {
+    for (folded <- graft.dp.IncrementalAgg.stateTag(spark, statePath) if folded != preTokenize)
+      throw new IllegalArgumentException(
+        s"word-count state $statePath was folded with pre_tokenize $folded, not $preTokenize")
     spark.read.parquet(statePath)
       .orderBy(col("n").desc, col("word").asc)
       .limit(maxWords)
       .collect()
       .map(r => (r.getString(0), r.getLong(1)))
       .toSeq
+  }
 
   /** [[trainArtifacts]] from a maintained word-count state directory:
     * merges + token-id vocabulary with zero corpus scans. */
@@ -174,8 +196,9 @@ object Bpe {
       statePath: String,
       numMerges: Int,
       maxWords: Int = 50000,
-      minPairCount: Long = 2L): (DataFrame, DataFrame) = {
-    val counts = countsFromState(spark, statePath, maxWords)
+      minPairCount: Long = 2L,
+      preTokenize: String = Whitespace): (DataFrame, DataFrame) = {
+    val counts = countsFromState(spark, statePath, maxWords, preTokenize)
     val merges = trainFromCounts(spark, counts, numMerges, minPairCount)
     (merges, vocabWithIdsFromCounts(spark, counts, merges))
   }

@@ -97,8 +97,9 @@ object WordPiece {
       statePath: String,
       numMerges: Int,
       maxWords: Int = 50000,
-      minPairCount: Long = 2L): (DataFrame, DataFrame) = {
-    val counts = Bpe.countsFromState(spark, statePath, maxWords)
+      minPairCount: Long = 2L,
+      preTokenize: String = Bpe.Whitespace): (DataFrame, DataFrame) = {
+    val counts = Bpe.countsFromState(spark, statePath, maxWords, preTokenize)
     val merges = trainFromCounts(spark, counts, numMerges, minPairCount)
     (merges, vocabWithIdsFromCounts(spark, counts, merges))
   }

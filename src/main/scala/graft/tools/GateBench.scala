@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -38,20 +37,14 @@ object GateBench {
     val reps = args.lift(1).map(_.toInt).getOrElse(3)
     val spark = graft.Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     spark.sparkContext.setLogLevel("ERROR")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    })
+    val telemetry = graft.obs.Telemetry.attach(spark)
     /** Warm both sides once, untimed, then `reps` alternating timed runs. */
     def bench(op: String, size: Long, gatedBound: Long)(run: Long => Boolean): Unit = {
       run(gatedBound)
       run(0)
       for (_ <- 1 to reps; (side, bound) <- Seq("gated" -> gatedBound, "spark" -> 0L)) {
-        val j0 = jobs.get()
-        val t0 = System.nanoTime()
-        val local = run(bound)
-        val s = (System.nanoTime() - t0) / 1e9
-        println(f"""{"op": "$op", "size": $size, "side": "$side", "wall_s": $s%.3f, "jobs": ${jobs.get() - j0}, "local": $local}""")
+        val (local, rec) = telemetry.measure(run(bound))
+        println(f"""{"op": "$op", "size": $size, "side": "$side", "wall_s": ${rec.sec}%.3f, "jobs": ${rec.jobs.size}, "local": $local}""")
       }
     }
     try {

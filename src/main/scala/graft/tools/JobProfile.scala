@@ -1,7 +1,7 @@
 package graft.tools
 import graft.Sessions
 
-/** Per-job breakdown of one query's wall time (r20 optimization round).
+/** How long a query takes and where the time goes (r20 optimization round).
   *
   * The bench tells us WHAT a query costs; this tool tells us WHERE —
   * Spark job count and per-job wall/task time, so "3 s on 17 MB of
@@ -10,82 +10,49 @@ import graft.Sessions
   *
   *   SPARK_GRAFT_SF_DIR=... sbt "runMain graft.tools.JobProfile q1 q2"
   *
-  * Each query runs twice (the second run is the steady-state one the
-  * bench's cold_min approximates); per-job lines are printed for the
-  * second run only, with the gap between jobs (driver-side planning /
-  * non-Spark work) called out, because at sf0.1 the driver gaps are
-  * routinely half the query.
+  * Each query runs five times in one fresh session, each run
+  * against a cold Spark cache and timed on `.count()` as the bench is, so
+  * the numbers compare with cold_min. Per query it prints one JSON line,
+  * `{"query","min_sec","median_sec","runs"}` — the same-session probe for
+  * bench-drift adjudication: the min is the least-noise estimator to hold
+  * against a suite's numbers. Then come the per-job lines of the fastest
+  * run, with the gap before each job (driver-side planning / non-Spark
+  * work) called out, because at sf0.1 the driver gaps are routinely half
+  * the query, and its eight stages with the most task time, labeled by
+  * the RDD scopes of the physical operators they ran.
   */
 object JobProfile {
   def main(args: Array[String]): Unit = {
+    require(args.nonEmpty, "usage: JobProfile query...")
+    val reps = 5
     val spark = Sessions.local()
     spark.sparkContext.setLogLevel("ERROR")
+    val telemetry = graft.obs.Telemetry.attach(spark)
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    require(args.nonEmpty, "pass query names")
     val all = graft.SparkEntry.queries ++ graft.SparkEntry.benchQueries
-
-    final case class J(id: Int, desc: String, start: Long, var end: Long,
-        var tasks: Int, var taskTime: Long)
-    final case class St(id: Int, var name: String, var tasks: Int, var taskTime: Long)
-    val jobs = new scala.collection.concurrent.TrieMap[Int, J]
-    val stageJob = new scala.collection.concurrent.TrieMap[Int, Int]
-    val stages = new scala.collection.concurrent.TrieMap[Int, St]
-    var collecting = false
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (collecting) {
-          val desc = Option(e.properties)
-            .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
-          jobs.put(e.jobId, J(e.jobId, desc, e.time, e.time, 0, 0L))
-          e.stageIds.foreach(s => stageJob.put(s, e.jobId))
-        }
-      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-        jobs.get(e.jobId).foreach(_.end = e.time)
-      override def onStageCompleted(
-          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        if (collecting && stageJob.contains(e.stageInfo.stageId)) {
-          // the RDD scopes name the physical operators this stage runs
-          // (WholeStageCodegen ids map back to the numbered plan)
-          val scopes = e.stageInfo.rddInfos
-            .flatMap(_.scope.map(_.name)).distinct.mkString(" | ")
-          stages.getOrElseUpdate(e.stageInfo.stageId,
-            St(e.stageInfo.stageId, "", 0, 0L)).name = scopes.take(160)
-        }
-      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        for (jid <- stageJob.get(e.stageId); j <- jobs.get(jid)) {
-          j.tasks += 1
-          if (e.taskMetrics != null) j.taskTime += e.taskMetrics.executorRunTime
-          val st = stages.getOrElseUpdate(e.stageId, St(e.stageId, "", 0, 0L))
-          st.tasks += 1
-          if (e.taskMetrics != null) st.taskTime += e.taskMetrics.executorRunTime
-        }
-    })
 
     spark.read.parquet(s"$dir/region.parquet").groupBy("r_name").count().count()
     for (name <- args) {
       val fn = all(name)
-      spark.catalog.clearCache()
-      val t0 = System.nanoTime(); fn(spark, dir).count()
-      val first = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      jobs.clear(); stageJob.clear(); stages.clear(); collecting = true
-      val t1 = System.nanoTime(); fn(spark, dir).count()
-      val second = (System.nanoTime() - t1) / 1e9
-      collecting = false
-      org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext)
-      val js = jobs.values.toSeq.sortBy(_.start)
-      println(f"\n=== $name first=$first%.2fs second=$second%.2fs jobs=${js.size}")
-      var prevEnd = t1 / 1000000L
-      for (j <- js) {
+      val measured = (1 to reps).map { _ =>
+        spark.catalog.clearCache()
+        telemetry.measure(fn(spark, dir).count())._2
+      }
+      val times = measured.map(_.sec)
+      println(f"""{"query":"$name","min_sec":${times.min}%.3f,"median_sec":${times.sorted.apply(reps / 2)}%.3f,"runs":[${times.map(t => f"$t%.3f").mkString(",")}]}""")
+      val rec = measured.minBy(_.sec)
+      println(f"=== $name fastest=${rec.sec}%.2fs jobs=${rec.jobs.size}")
+      var prevEnd = rec.start
+      for (j <- rec.jobs.sortBy(_.start)) {
         val gap = j.start - prevEnd
         prevEnd = math.max(prevEnd, j.end)
-        println(f"  job ${j.id}%3d wall=${(j.end - j.start) / 1000.0}%6.3fs gapBefore=${gap / 1000.0}%6.3fs tasks=${j.tasks}%4d taskTime=${j.taskTime / 1000.0}%7.3fs  ${j.desc.take(80)}")
+        val st = rec.stages.filter(_.job == j.id)
+        println(f"  job ${j.id}%3d wall=${(j.end - j.start) / 1000.0}%6.3fs gapBefore=${gap / 1000.0}%6.3fs tasks=${st.map(_.tasks).sum}%4d taskTime=${st.map(_.runMs).sum / 1000.0}%7.3fs  ${j.description.take(80)}")
       }
-      val wall = js.map(j => j.end - j.start).sum / 1000.0
-      val gaps = second - wall / 1.0
-      println(f"  sum(job wall)=$wall%.3fs driver-gaps=$gaps%.3fs")
-      for (st <- stages.values.toSeq.sortBy(-_.taskTime).take(8))
-        println(f"  stage ${st.id}%4d job=${stageJob.getOrElse(st.id, -1)}%3d tasks=${st.tasks}%4d taskTime=${st.taskTime / 1000.0}%7.3fs  ${st.name}")
+      val wall = rec.jobs.map(j => j.end - j.start).sum / 1000.0
+      println(f"  sum(job wall)=$wall%.3fs driver-gaps=${rec.sec - wall}%.3fs")
+      for (st <- rec.stages.sortBy(-_.runMs).take(8))
+        println(f"  stage ${st.id}%4d job=${st.job}%3d tasks=${st.tasks}%4d taskTime=${st.runMs / 1000.0}%7.3fs  ${st.scopes.mkString(" | ").take(160)}")
     }
     spark.stop()
   }

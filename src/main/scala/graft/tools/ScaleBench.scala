@@ -482,13 +482,7 @@ object ScaleBench {
     * the warm repeat isolates per-task scheduling + footer overhead. */
   private def compactionDecay(spark: SparkSession): Unit = {
     import graft.similarity.AnnIndex
-    val dir = "/tmp/graft_compaction_corpus"
-    if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
-      System.err.println("[scalebench] staging the 1.12M clustered corpus (one-off)")
-      Recall.clusteredCorpus(spark, n = 1120000L, dims = 16,
-          clusters = 1024, noise = 1.0)
-        .write.mode("overwrite").parquet(dir)
-    }
+    val dir = stagedCorpus(spark)
     val all = spark.read.parquet(dir)
     val queries = all.filter(col("vec_id") < 20)
     val out = "/tmp/graft_compaction_idx"
@@ -536,13 +530,7 @@ object ScaleBench {
     * exists: the source may be cold, remote, or already deleted). */
   private def reshardProbe(spark: SparkSession): Unit = {
     import graft.similarity.AnnIndex
-    val dir = "/tmp/graft_compaction_corpus"
-    if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
-      System.err.println("[scalebench] staging the 1.12M clustered corpus (one-off)")
-      Recall.clusteredCorpus(spark, n = 1120000L, dims = 16,
-          clusters = 1024, noise = 1.0)
-        .write.mode("overwrite").parquet(dir)
-    }
+    val dir = stagedCorpus(spark)
     val corpus = spark.read.parquet(dir).filter(col("vec_id") < 1000000L)
     def du(path: String): Long = {
       val p = new org.apache.hadoop.fs.Path(path)
@@ -586,13 +574,7 @@ object ScaleBench {
     * the threshold that fired. */
   private def reshardRehearsal(spark: SparkSession): Unit = {
     import graft.similarity.AnnIndex
-    val dir = "/tmp/graft_compaction_corpus"
-    if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
-      System.err.println("[scalebench] staging the 1.12M clustered corpus (one-off)")
-      Recall.clusteredCorpus(spark, n = 1120000L, dims = 16,
-          clusters = 1024, noise = 1.0)
-        .write.mode("overwrite").parquet(dir)
-    }
+    val dir = stagedCorpus(spark)
     val base = spark.read.parquet(dir).filter(col("vec_id") < 1000000L)
     // hash-biased ids: everything shard 0 would own, plus a thin slice of
     // shard 1's — the exact skew signature maintain's stats read detects.
@@ -666,6 +648,19 @@ object ScaleBench {
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(idx))
   }
 
+  /** The 1.12M-vector clustered corpus (16 dims, 1024 clusters) the index
+    * probes share, staged once under /tmp; returns its directory. */
+  private def stagedCorpus(spark: SparkSession): String = {
+    val dir = "/tmp/graft_compaction_corpus"
+    if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
+      System.err.println("[scalebench] staging the 1.12M clustered corpus (one-off)")
+      Recall.clusteredCorpus(spark, n = 1120000L, dims = 16,
+          clusters = 1024, noise = 1.0)
+        .write.mode("overwrite").parquet(dir)
+    }
+    dir
+  }
+
   /** `append-probe`: the r18 append-assignment fix measured at
     * nlist = 4096 (the scale the local bench's tiny fixture indexes
     * cannot surface — r17 verdict #1). One IVF index over 1M clustered
@@ -675,20 +670,14 @@ object ScaleBench {
     * intermediate rows through a shuffle, ~400 B each) and the shipped
     * map-only [[graft.similarity.AnnIndex.assignToPersistedCells]]
     * (|batch| rows end to end, centroids on one broadcast row). Wall
-    * time + total shuffle read/write bytes from a task-metrics
-    * listener; both shapes must agree on every assignment. Production
+    * time + total shuffle read/write bytes from the stage metrics of
+    * [[graft.obs.Telemetry]]; both shapes must agree on every assignment. Production
     * appends are 100× this batch at up to 16× this nlist — the shuffle
     * column scales multiplicatively, the map-only column linearly in
     * |batch| alone. */
   private def appendProbe(spark: SparkSession): Unit = {
     import graft.similarity.{AnnIndex, Similarity}
-    val dir = "/tmp/graft_compaction_corpus"
-    if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
-      System.err.println("[scalebench] staging the 1.12M clustered corpus (one-off)")
-      Recall.clusteredCorpus(spark, n = 1120000L, dims = 16,
-          clusters = 1024, noise = 1.0)
-        .write.mode("overwrite").parquet(dir)
-    }
+    val dir = stagedCorpus(spark)
     val all = spark.read.parquet(dir)
     val idx = "/tmp/graft_append_probe_idx"
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(idx))
@@ -723,32 +712,14 @@ object ScaleBench {
       AnnIndex.assignToPersistedCells(corpusVec, centDf)
         .select(col("vec_id"), col("__cell"))
 
-    val read = new java.util.concurrent.atomic.AtomicLong
-    val write = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) {
-          read.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-          write.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          ()
-        }
-      }
-    }
+    val telemetry = graft.obs.Telemetry.attach(spark)
     var oldCells: Map[Long, Int] = Map.empty
     for ((label, df) <- Seq("old_window" -> oldShape, "new_maponly" -> newShape)) {
-      read.set(0L); write.set(0L)
-      spark.sparkContext.addSparkListener(listener)
-      val t0 = System.nanoTime()
-      val got = df.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-      val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(2000) // drain the async listener bus before reading
-      spark.sparkContext.removeSparkListener(listener)
+      val (got, rec) = telemetry.measure(df.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap)
       if (label == "old_window") oldCells = got
       else require(got == oldCells,
         "append-probe: the map-only assignment diverged from the window shape")
-      println(f"""{"query":"append_assign_$label","nlist":4096,"batch":${got.size},"sec":$sec%.3f,"shuffle_read":${read.get},"shuffle_write":${write.get}}""")
+      println(f"""{"query":"append_assign_$label","nlist":4096,"batch":${got.size},"sec":${rec.sec}%.3f,"shuffle_read":${rec.shuffleRead},"shuffle_write":${rec.shuffleWrite}}""")
     }
     corpusVec.unpersist(true)
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(idx))
@@ -763,13 +734,7 @@ object ScaleBench {
     * search — back to the zero-tombstone cost. */
   private def tombstoneProbe(spark: SparkSession): Unit = {
     import graft.similarity.AnnIndex
-    val dir = "/tmp/graft_compaction_corpus"
-    if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
-      System.err.println("[scalebench] staging the 1.12M clustered corpus (one-off)")
-      Recall.clusteredCorpus(spark, n = 1120000L, dims = 16,
-          clusters = 1024, noise = 1.0)
-        .write.mode("overwrite").parquet(dir)
-    }
+    val dir = stagedCorpus(spark)
     val all = spark.read.parquet(dir)
     val queries = all.filter(col("vec_id") < 50)
     val idx = "/tmp/graft_tombstone_probe_idx"
@@ -1010,13 +975,7 @@ object ScaleBench {
     import graft.streaming.Streaming
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
-    val dir = "/tmp/graft_compaction_corpus"
-    if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
-      System.err.println("[scalebench] staging the 1.12M clustered corpus (one-off)")
-      Recall.clusteredCorpus(spark, n = 1120000L, dims = 16,
-          clusters = 1024, noise = 1.0)
-        .write.mode("overwrite").parquet(dir)
-    }
+    val dir = stagedCorpus(spark)
     val all = spark.read.parquet(dir)
     val work = java.nio.file.Files.createTempDirectory("graft_interleave").toString
     val idx = s"$work/idx"

@@ -14,8 +14,8 @@ object Bridge {
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
   /** Drain the listener bus so SparkListener-accumulated metrics are
-    * complete before a benchmark snapshot (`listenerBus` is
-    * private[spark]; this re-export exists for graft.Bench only). */
+    * complete before they are read (`listenerBus` is private[spark]; this
+    * re-export exists for graft.obs.Telemetry and perfbench's trace). */
   def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
 

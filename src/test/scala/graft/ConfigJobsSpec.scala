@@ -1228,6 +1228,51 @@ class ConfigJobsSpec extends AnyFunSuite {
     assert(!toks.exists(t => t.replace(graft.text.Bpe.EndOfWord, "").matches("[a-z]+\\.")),
       "punctuation stayed glued to a word")
   }
+  test("tokenizer train from_state refuses a word-count state folded under another pre_tokenize") {
+    val spark = SparkSpec.session
+    import spark.implicits._
+    val work = java.nio.file.Files.createTempDirectory("graft-fold-mode-jobs").toString
+    Seq.fill(12)("the end. it's fine! ok?").zipWithIndex
+      .map { case (t, i) => (i.toLong, t) }
+      .toDF("doc_id", "text").write.mode("overwrite").parquet(s"$work/docs")
+    def cfg(task: String, params: Map[String, String]) = Map(
+      "core" -> Map("seed" -> 7),
+      "job_catalog" -> Map("jobs" -> List(
+        Map("name" -> "tokenizer", "fail_fast" -> true, "stages" -> List(
+          Map("name" -> "t", "tasks" -> List(Map("name" -> task, "params" -> params))))))),
+      "data_catalog" -> Map(
+        "raw" -> Map("documents" -> s"$work/docs"),
+        "models" -> Map("word_counts" -> s"$work/word_counts",
+          "bpe_merges" -> s"$work/merges", "bpe_vocab" -> s"$work/vocab")))
+    def run(task: String, params: (String, String)*) =
+      graft.pipeline.Jobs.run(Context(cfg(task, params.toMap), spark), "tokenizer", failFast = true)
+    def refused(task: String, params: (String, String)*) =
+      intercept[IllegalArgumentException](run(task, params: _*)).getMessage
+    graft.pipeline.Production.registerAll()
+    assert(run("word-count-fold", "pre_tokenize" -> "whitespace", "batch_id" -> "1").isEmpty)
+    val train = Seq("num_merges" -> "20", "from_state" -> "true")
+    // gpt2 would train on whitespace-split words: refused, naming both modes
+    val mismatch = refused("train", train :+ ("pre_tokenize" -> "gpt2"): _*)
+    assert(mismatch.contains("gpt2") && mismatch.contains("whitespace"), mismatch)
+    assert(!new java.io.File(s"$work/merges").exists())
+    // the same mode still trains off the state
+    assert(run("train", train :+ ("pre_tokenize" -> "whitespace"): _*).isEmpty)
+    assert(spark.read.parquet(s"$work/merges").count() > 0)
+    // and a later fold under another mode cannot mix its words into the state
+    val mixed = refused("word-count-fold", "pre_tokenize" -> "gpt2", "batch_id" -> "2")
+    assert(mixed.contains("gpt2") && mixed.contains("whitespace"), mixed)
+    assert(graft.dp.IncrementalAgg.stateTag(spark, s"$work/word_counts") === Some("whitespace"))
+
+    // a state folded before modes were recorded stays untagged: a later
+    // fold cannot vouch for the batches already in it, so it adds no mode
+    // that train would then take for a match
+    graft.dp.IncrementalAgg.foldStateDir(spark, s"$work/legacy",
+      graft.text.Bpe.wordCountState(spark.read.parquet(s"$work/docs"), "text"), "word",
+      batchId = 1L, merge = graft.text.Bpe.mergeWordCounts)
+    graft.text.Bpe.foldWordCounts(spark.read.parquet(s"$work/docs"), "text", s"$work/legacy",
+      batchId = 2L, preTokenize = graft.text.Bpe.Gpt2)
+    assert(graft.dp.IncrementalAgg.stateTag(spark, s"$work/legacy") === None)
+  }
   test("export-webdataset catalog job delivers a zone as tar shards") {
     val spark = SparkSpec.session
     import spark.implicits._

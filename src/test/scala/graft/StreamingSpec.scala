@@ -270,6 +270,27 @@ class StreamingSpec extends SparkSpec {
     assert(rows(vocabS) === rows(vocabC))
   }
 
+  test("maintainWordCounts refuses to fold whitespace words into a gpt2 word-count state") {
+    implicit val sqlCtx = spark.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("graft_wc_mode").toString
+    val statePath = s"$dir/state"
+    graft.text.Bpe.foldWordCounts(Seq("it's the end.").toDF("text"), "text", statePath,
+      preTokenize = graft.text.Bpe.Gpt2)
+    val before = spark.read.parquet(statePath).as[(String, Long)].collect().toSet
+    val input = MemoryStream[(Long, String)]
+    val query = Streaming.maintainWordCounts(
+      input.toDF().toDF("doc_id", "text"), "text", statePath, s"$dir/ckpt")
+    input.addData((1L, "it's the end."))
+    val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      query.processAllAvailable())
+    query.stop()
+    val causes = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(c => c.isInstanceOf[IllegalArgumentException] &&
+      c.getMessage.contains("tagged gpt2")), err)
+    assert(graft.dp.IncrementalAgg.stateTag(spark, statePath) === Some(graft.text.Bpe.Gpt2))
+    assert(spark.read.parquet(statePath).as[(String, Long)].collect().toSet === before)
+  }
+
   test("maintainGradedSamples: pass@k from streamed state equals the batch estimator") {
     implicit val sqlCtx = spark.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("graft_pak_stream").toString
