@@ -35,11 +35,14 @@ object IncrementalAgg {
 
   /** Fold a batch's state into a parquet state DIRECTORY with a
     * read-merge-swap: merge with the existing state (if any), write to a
-    * temp dir, then rename into place — the state table is never read and
-    * overwritten in the same job, and a crash mid-write leaves the old
-    * state intact. `batchId` makes replays idempotent: a batch at or below
-    * the last folded id is skipped (the at-least-once delivery of
-    * checkpointed streaming restarts would otherwise double-count).
+    * temp dir, then publish it with [[graft.io.Publish.swap]] — the state
+    * table is never read and overwritten in the same job, and a crash
+    * mid-write leaves the old state intact. A crash inside the swap is
+    * recovered on entry: the next fold first restores the `<state>.old`
+    * backup when the state dir is missing. `batchId` makes replays
+    * idempotent: a batch at or below the last folded id is skipped (the
+    * at-least-once delivery of checkpointed streaming restarts would
+    * otherwise double-count).
     * `tag` says how the state was built (say, the tokenizer's pre-tokenize
     * mode). The fold that creates the state stores it inside the same
     * swap; every later fold must carry the same tag or fails before it
@@ -60,6 +63,11 @@ object IncrementalAgg {
       tag: Option[String] = None): Unit = {
     val dir = new Path(statePath)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val tmp = new Path(statePath + ".tmp")
+    val old = new Path(statePath + ".old")
+    // a crashed swap leaves the only copy of the history in `old`: restore
+    // it before anything reads the state, its batch marker included
+    val exists = graft.io.Publish.recover(spark, dir, tmp, old)
     def write(p: Path, text: String): Unit = {
       val out = fs.create(p, true)
       try out.write(text.getBytes("UTF-8")) finally out.close()
@@ -77,7 +85,6 @@ object IncrementalAgg {
       val last = readMarker(markerIn(dir)).orElse(readMarker(legacyMarker))
       if (last.exists(batchId <= _)) return // replayed batch — already folded
     }
-    val exists = fs.exists(dir)
     val had = if (exists) readText(fs, tagIn(dir)) else None
     if (had.isDefined && tag != had)
       throw new IllegalArgumentException(
@@ -85,23 +92,10 @@ object IncrementalAgg {
     val merged =
       if (exists) merge(spark.read.parquet(statePath), batchState, keyCol)
       else batchState
-    val tmp = new Path(statePath + ".tmp")
-    fs.delete(tmp, true)
     merged.write.mode("overwrite").parquet(tmp.toString)
     if (batchId != Long.MinValue) write(markerIn(tmp), batchId.toString)
     (if (exists) had else tag).foreach(write(tagIn(tmp), _))
-    // Hadoop rename signals failure by returning FALSE, not throwing —
-    // an unchecked rename could delete the only surviving state copy
-    val old = new Path(statePath + ".old")
-    fs.delete(old, true)
-    if (fs.exists(dir) && !fs.rename(dir, old))
-      throw new java.io.IOException(s"foldStateDir: rename $dir -> $old failed")
-    if (!fs.rename(tmp, dir)) {
-      // restore the previous state before surfacing the failure
-      if (fs.exists(old)) fs.rename(old, dir)
-      throw new java.io.IOException(s"foldStateDir: rename $tmp -> $dir failed")
-    }
-    fs.delete(old, true)
+    graft.io.Publish.swap(spark, dir, tmp, old)
     // migration: drop a legacy side-car marker so it can't shadow the
     // in-directory one on older state dirs
     fs.delete(new Path(statePath + ".batchid"), false)

@@ -26,15 +26,13 @@ import org.apache.spark.sql.functions.col
   * layouts (e.g. LSH signature tables) keep sharp row-group min/max
   * pruning.
   *
-  * Crash contract: the publish is (live → `.precompact_<name>`, staged
-  * → live, delete backup), each rename CHECKED — Hadoop
-  * `FileSystem.rename` reports most failures by returning false (the
-  * TfRecord publish precedent, `io/TfRecord.scala`). A staged rewrite
-  * whose row count disagrees with the live table aborts BEFORE any
-  * rename. A crash between the two renames leaves the backup intact and
-  * the live path absent — readers fail loudly (never silently serve
-  * half a table) and the next compaction call restores the backup
-  * first. Data is never deleted until the swap has fully succeeded.
+  * Publish: the staged rewrite replaces the live table through
+  * [[Publish.swap]] (staged `<parent>/.compacting_<name>`, backup
+  * `<parent>/.precompact_<name>`), whose crash contract applies; a
+  * staged rewrite whose row count disagrees with the live table aborts
+  * BEFORE any rename. Compaction adds the [[PublishedMarker]], which
+  * tells a stale backup from one a blind append has recreated the live
+  * path over.
   *
   * Concurrency contract: SINGLE MAINTAINER. Run compaction from the
   * same lane that appends (the streaming `compactEvery` cadence is
@@ -45,6 +43,11 @@ import org.apache.spark.sql.functions.col
   * rows always survive; the compaction is what retries). This is not a
   * lock — two simultaneous compactions of one table are not defended. */
 object Compaction {
+
+  private def backupOf(live: org.apache.hadoop.fs.Path) =
+    new org.apache.hadoop.fs.Path(live.getParent, s".precompact_${live.getName}")
+  private def stagedOf(live: org.apache.hadoop.fs.Path) =
+    new org.apache.hadoop.fs.Path(live.getParent, s".compacting_${live.getName}")
 
   /** Marker file the staged rewrite plants inside the table tree before
     * the publish renames. Its presence in a LIVE table proves the table
@@ -65,13 +68,21 @@ object Compaction {
   def requireNoPendingPublish(spark: SparkSession, tableDir: String): Unit = {
     import org.apache.hadoop.fs.Path
     val live = new Path(tableDir)
-    val backup = new Path(live.getParent, s".precompact_${live.getName}")
+    val backup = backupOf(live)
     val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(live) && fs.exists(backup))
       throw new IllegalStateException(
         s"append to $tableDir refused: a crashed compaction publish left " +
           s"the authoritative table at $backup — run the owning compact() " +
           "to recover it before appending")
+  }
+
+  /** Recover a crashed compaction publish of `tableDir`, if one is
+    * pending, without compacting: the backup becomes the live table
+    * again. For a maintainer that appends to a table it also compacts. */
+  def recover(spark: SparkSession, tableDir: String): Unit = {
+    val live = new org.apache.hadoop.fs.Path(tableDir)
+    Publish.recover(spark, live, stagedOf(live), backupOf(live))
   }
 
   /** Recursive part-file census of a table directory: (files, bytes).
@@ -134,19 +145,12 @@ object Compaction {
     require(orderCols.nonEmpty, "compactParquet needs at least one order column")
     import org.apache.hadoop.fs.Path
     val live = new Path(tableDir)
-    val name = live.getName
-    val backup = new Path(live.getParent, s".precompact_$name")
-    val staged = new Path(live.getParent, s".compacting_$name")
+    val backup = backupOf(live)
+    val staged = stagedOf(live)
     val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // recover a crashed publish: the backup is the authoritative copy
-    // whenever the live table is missing (crash between the two renames)
-    if (!fs.exists(live)) {
-      require(fs.exists(backup),
-        s"compact: no table at $tableDir and no .precompact backup to recover")
-      require(fs.rename(backup, live),
-        s"compact: recovery rename $backup -> $live failed")
-    }
-    if (fs.exists(staged)) fs.delete(staged, true) // stale crash leftovers
+    // a crashed publish leaves the authoritative copy in the backup
+    require(Publish.recover(spark, live, staged, backup),
+      s"compact: no table at $tableDir and no .precompact backup to recover")
     // rows appended by ANOTHER session before this compact started can be
     // in the fresh FS listing below but absent from this session's stale
     // FileStatusCache snapshot — the rewrite would then silently drop them
@@ -209,37 +213,22 @@ object Compaction {
         s"compact: $tableDir changed while the rewrite ran (concurrent " +
           "append?) — aborted without publishing; quiesce writers and rerun")
     }
-    if (fs.exists(backup)) {
-      // a backup can legitimately coexist with a live table only when a
-      // PRIOR publish crashed after its second rename — and that live
-      // table carries the publish marker. A live tree WITHOUT the marker
-      // beside a backup means a crash BETWEEN the renames followed by a
-      // blind append that recreated the live path with one batch's rows:
-      // the backup is the whole table. Refuse to delete it — deleting
-      // here and renaming the recreation over it would silently destroy
-      // the table (r17 ADVICE).
-      require(fs.exists(new Path(live, PublishedMarker)),
-        s"compact: $tableDir coexists with backup $backup but carries no " +
-          "publish marker — the live path looks like a blind-append " +
-          "recreation after a crashed publish and the backup is the " +
-          "authoritative table. Recover manually: move the live path " +
-          "aside, rename the backup into place, re-append the moved rows, " +
-          "then rerun compact.")
-      fs.delete(backup, true)
-    }
-    require(fs.rename(live, backup),
-      s"compact: publish rename $live -> $backup failed")
-    require(fs.rename(staged, live),
-      s"compact: publish rename $staged -> $live failed " +
-        s"(live table preserved at $backup — rerun compact to recover)")
-    fs.delete(backup, true)
-    // drop the session's cached file listing for the rewritten path: a
-    // long-lived session that already read this table (a serving search,
-    // the appender's schema probe) holds the OLD part-file listing in the
-    // shared FileStatusCache and its next read dies with FILE_NOT_EXIST —
-    // exactly the steady-state session the in-line compaction cadence
-    // runs in
-    spark.catalog.refreshByPath(tableDir)
+    // a backup can legitimately coexist with a live table only when a
+    // PRIOR publish crashed after its second rename — and that live
+    // table carries the publish marker. A live tree WITHOUT the marker
+    // beside a backup means a crash BETWEEN the renames followed by a
+    // blind append that recreated the live path with one batch's rows:
+    // the backup is the whole table. Refuse to let the swap delete it —
+    // renaming the recreation over it would silently destroy the table
+    // (r17 ADVICE).
+    require(!fs.exists(backup) || fs.exists(new Path(live, PublishedMarker)),
+      s"compact: $tableDir coexists with backup $backup but carries no " +
+        "publish marker — the live path looks like a blind-append " +
+        "recreation after a crashed publish and the backup is the " +
+        "authoritative table. Recover manually: move the live path " +
+        "aside, rename the backup into place, re-append the moved rows, " +
+        "then rerun compact.")
+    Publish.swap(spark, live, staged, backup)
     after
   }
 }

@@ -321,18 +321,12 @@ object TfRecord {
       case (c, _) => col(c)
     }: _*)
     val names = contentCols
-    val kv = {
-      val conf = df.sparkSession.sparkContext.hadoopConfiguration
-      val it = conf.iterator(); val b = Array.newBuilder[(String, String)]
-      while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue }
-      b.result()
-    }
-    val stagingName = s".staging-${java.util.UUID.randomUUID().toString.take(8)}"
-    val dirStr = s"$dir/$stagingName"
+    val kv = ShardFiles.confEntries(df.sparkSession.sparkContext.hadoopConfiguration)
+    val staging = Publish.stagingDir(dir)
+    val dirStr = staging.toString
     val perShard = rowsPerShard
     val written = projected.queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
-      val c = new org.apache.hadoop.conf.Configuration(false)
-      kv.foreach { case (k, v) => c.set(k, v) }
+      val c = ShardFiles.confOf(kv)
       var out: org.apache.hadoop.fs.FSDataOutputStream = null
       var shard = -1
       var inShard = 0
@@ -373,72 +367,19 @@ object TfRecord {
     }.sum()
     require(written >= 0) // forces the job
     // publish: the job succeeded — swap the old shards for the staged ones
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val staging = new org.apache.hadoop.fs.Path(dir, stagingName)
-    val fs = root.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-    Option(fs.globStatus(new org.apache.hadoop.fs.Path(root, "shard-*.tfrecord")))
-      .toSeq.flatten.foreach(st => fs.delete(st.getPath, false))
-    // Hadoop FileSystem.rename reports most failures by returning FALSE,
-    // not throwing — and the old shards are already gone, so a silently
-    // failed rename would drop the shard from the export with no error.
-    // Fail loudly instead: the staging dir is left in place for forensics.
-    Option(fs.listStatus(staging)).toSeq.flatten.filter(_.isFile)
-      .foreach { st =>
-        val dst = new org.apache.hadoop.fs.Path(root, st.getPath.getName)
-        require(fs.rename(st.getPath, dst),
-          s"writeShards: publish rename failed for ${st.getPath} -> $dst " +
-            "(staged shards left under the .staging dir; the export is incomplete)")
-      }
-    fs.delete(staging, true)
+    Publish.replaceFiles(df.sparkSession, staging, "shard-*.tfrecord")
   }
 
   // ------------------------------------------------------------- the read
-
-  private def listShards(spark: SparkSession, paths: Seq[String]): Seq[String] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    paths.flatMap { p =>
-      val path = new org.apache.hadoop.fs.Path(p)
-      val fs = path.getFileSystem(conf)
-      val matched = Option(fs.globStatus(path)).map(_.toSeq).getOrElse(Seq.empty)
-      require(matched.nonEmpty, s"readShards: no files match $p")
-      matched.flatMap { st =>
-        if (st.isDirectory)
-          fs.listStatus(st.getPath).toSeq.filter(_.isFile).map(_.getPath.toString)
-        else Seq(st.getPath.toString)
-      }
-    }.sorted
-  }
 
   /** Read TFRecord shards back as one row per record:
     * (shard_file, rec_no, payload BINARY) — the raw Example bytes, CRCs
     * verified. One task per shard, record-streaming. */
   def readShards(spark: SparkSession, paths: Seq[String]): DataFrame = {
     import spark.implicits._
-    val files = listShards(spark, paths)
-    val kv = {
-      val conf = spark.sparkContext.hadoopConfiguration
-      val it = conf.iterator(); val b = Array.newBuilder[(String, String)]
-      while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue }
-      b.result()
-    }
-    spark.createDataset(files)
-      .repartition(files.size.max(1))
-      .mapPartitions { it =>
-        val c = new org.apache.hadoop.conf.Configuration(false)
-        kv.foreach { case (k, v) => c.set(k, v) }
-        var open: java.io.InputStream = null
-        Option(org.apache.spark.TaskContext.get()).foreach(
-          _.addTaskCompletionListener[Unit] { _ =>
-            if (open != null) { try open.close() catch { case _: Exception => () } }
-          })
-        it.flatMap { f =>
-          val p = new org.apache.hadoop.fs.Path(f)
-          val raw = p.getFileSystem(c).open(p)
-          open = raw
-          records(raw, f).zipWithIndex.map { case (data, i) => (f, i.toLong, data) }
-        }
-      }
-      .toDF("shard_file", "rec_no", "payload")
+    ShardFiles.read(spark, paths, "readShards") { (raw, f) =>
+      records(raw, f).zipWithIndex.map { case (data, i) => (f, i.toLong, data) }
+    }.toDF("shard_file", "rec_no", "payload")
   }
 
   /** Read shards and PARSE each record's tf.Example into typed columns:

@@ -4,7 +4,7 @@ import java.io.{BufferedInputStream, ByteArrayOutputStream, EOFException, InputS
 import java.nio.charset.StandardCharsets
 import java.util.zip.{GZIPInputStream, GZIPOutputStream}
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** WARC (Web ARChive, ISO 28500) record reader/writer — the first real
@@ -224,24 +224,6 @@ object Warc {
   private def headerEndLen(b: Array[Byte], sep: Int): Int =
     if (b(sep) == '\r') 4 else 1 // \r\n\r\n vs the bare \n\n (sep is the 2nd \n)
 
-  /** The driver's EFFECTIVE Hadoop configuration as a serializable
-    * key-value list — executors rebuild it verbatim, so driver-side
-    * settings (object-store endpoints/credentials, the things a real
-    * cluster sets programmatically) reach the per-file streams instead
-    * of being silently replaced by classpath defaults. */
-  private def confEntries(conf: org.apache.hadoop.conf.Configuration): Array[(String, String)] = {
-    val it = conf.iterator()
-    val b = Array.newBuilder[(String, String)]
-    while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue }
-    b.result()
-  }
-
-  private def confOf(entries: Array[(String, String)]): org.apache.hadoop.conf.Configuration = {
-    val c = new org.apache.hadoop.conf.Configuration(false)
-    entries.foreach { case (k, v) => c.set(k, v) }
-    c
-  }
-
   // ------------------------------------------------------------ the read
 
   /** Read WARC files (plain or `.warc.gz`) into a DataFrame of parsed
@@ -251,44 +233,7 @@ object Warc {
     * like Spark's own file sources. */
   def readWarc(spark: SparkSession, paths: Seq[String]): DataFrame = {
     import spark.implicits._
-    val conf = spark.sparkContext.hadoopConfiguration
-    val files: Seq[String] = paths.flatMap { p =>
-      val path = new org.apache.hadoop.fs.Path(p)
-      val fs = path.getFileSystem(conf)
-      val matched = Option(fs.globStatus(path)).map(_.toSeq).getOrElse(Seq.empty)
-      require(matched.nonEmpty, s"readWarc: no files match $p")
-      matched.flatMap { st =>
-        if (st.isDirectory)
-          fs.listStatus(st.getPath).toSeq.filter(_.isFile).map(_.getPath.toString)
-        else Seq(st.getPath.toString)
-      }
-    }.sorted
-    val kv = confEntries(conf)
-    val ds: Dataset[WarcRecord] = spark
-      .createDataset(files)
-      // one partition per file — the scheduler balances skewed shard
-      // sizes at file granularity, and a straggler holds one file, not a
-      // round-robin bundle of them
-      .repartition(files.size.max(1))
-      .mapPartitions { it =>
-        val c = confOf(kv)
-        // records() closes its stream at exhaustion, but an early-
-        // terminating consumer (limit/take) or a mid-file parse error
-        // abandons the iterator — close whatever is still open when the
-        // task ends, like Spark's own file sources do
-        var open: java.io.InputStream = null
-        Option(org.apache.spark.TaskContext.get()).foreach(
-          _.addTaskCompletionListener[Unit] { _ =>
-            if (open != null) { try open.close() catch { case _: Exception => () } }
-          })
-        it.flatMap { f =>
-          val p = new org.apache.hadoop.fs.Path(f)
-          val raw = p.getFileSystem(c).open(p)
-          open = raw
-          records(raw, f)
-        }
-      }
-    ds.toDF()
+    ShardFiles.read(spark, paths, "readWarc")(records).toDF()
   }
 
   /** The UTF-8 payload as a string column — for payloads KNOWN to be
@@ -382,7 +327,9 @@ object Warc {
     * each shard. Expects columns (uriCol: string, dateCol: timestamp,
     * idCol: string, mimeCol: string, payloadCol: binary). The inverse of
     * [[readWarc]] up to the warcinfo member (round-trip pinned by
-    * WarcSpec and the `warc_read` oracle). */
+    * WarcSpec and the `warc_read` oracle). The shards are staged in a
+    * hidden directory and published with [[Publish.replaceFiles]]: a
+    * re-export to the same `dir` replaces the old shards. */
   def writeWarc(
       df: DataFrame,
       dir: String,
@@ -395,14 +342,14 @@ object Warc {
       col(uriCol).cast("string"), col(dateCol).cast("timestamp"),
       col(idCol).cast("string"), col(mimeCol).cast("string"),
       col(payloadCol).cast("binary"))
-    val dirStr = dir
-    val kv = confEntries(
-      df.sparkSession.sparkContext.hadoopConfiguration)
+    val staging = Publish.stagingDir(dir)
+    val dirStr = staging.toString
+    val kv = ShardFiles.confEntries(df.sparkSession.sparkContext.hadoopConfiguration)
     val written = cols.queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
       if (it.isEmpty) Iterator.empty
       else {
         val p = new org.apache.hadoop.fs.Path(f"$dirStr%s/part-$pid%05d.warc.gz")
-        val fs = p.getFileSystem(confOf(kv))
+        val fs = p.getFileSystem(ShardFiles.confOf(kv))
         val out = fs.create(p, true)
         try {
           out.write(gzipMember(warcinfoRecordBytes(
@@ -434,5 +381,6 @@ object Warc {
       }
     }.sum()
     require(written >= 0) // forces the job
+    Publish.replaceFiles(df.sparkSession, staging, "part-*.warc.gz")
   }
 }

@@ -131,7 +131,9 @@ object WebDataset {
     * one member per (row, content column) named `<key>.<ext>`. String
     * columns land UTF-8, binary columns verbatim; null cells skip their
     * member (the WebDataset optional-field convention). Keys must be
-    * unique per row ([[readShards]] groups by them). */
+    * unique per row ([[readShards]] groups by them). The shards are staged
+    * in a hidden directory and published with [[Publish.replaceFiles]]:
+    * a re-export to the same `dir` replaces the old shards. */
   def writeShards(
       df: DataFrame,
       dir: String,
@@ -153,17 +155,12 @@ object WebDataset {
     val isBinary = contentCols.map { case (c, _) =>
       df.schema(c).dataType == org.apache.spark.sql.types.BinaryType }
     val exts = contentCols.map(_._2)
-    val kv = {
-      val conf = df.sparkSession.sparkContext.hadoopConfiguration
-      val it = conf.iterator(); val b = Array.newBuilder[(String, String)]
-      while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue }
-      b.result()
-    }
-    val dirStr = dir
+    val kv = ShardFiles.confEntries(df.sparkSession.sparkContext.hadoopConfiguration)
+    val staging = Publish.stagingDir(dir)
+    val dirStr = staging.toString
     val perShard = rowsPerShard
     val written = projected.queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
-      val c = new org.apache.hadoop.conf.Configuration(false)
-      kv.foreach { case (k, v) => c.set(k, v) }
+      val c = ShardFiles.confOf(kv)
       var out: org.apache.hadoop.fs.FSDataOutputStream = null
       var shard = -1
       var inShard = 0
@@ -196,6 +193,7 @@ object WebDataset {
       Iterator.single(n)
     }.sum()
     require(written >= 0) // forces the job
+    Publish.replaceFiles(df.sparkSession, staging, "shard-*.tar")
   }
 
   /** Read WebDataset shards back as one row per (shard, key, ext):
@@ -205,44 +203,12 @@ object WebDataset {
     * samples. */
   def readShards(spark: SparkSession, paths: Seq[String]): DataFrame = {
     import spark.implicits._
-    val conf = spark.sparkContext.hadoopConfiguration
-    val files: Seq[String] = paths.flatMap { p =>
-      val path = new org.apache.hadoop.fs.Path(p)
-      val fs = path.getFileSystem(conf)
-      val matched = Option(fs.globStatus(path)).map(_.toSeq).getOrElse(Seq.empty)
-      require(matched.nonEmpty, s"readShards: no files match $p")
-      matched.flatMap { st =>
-        if (st.isDirectory)
-          fs.listStatus(st.getPath).toSeq.filter(_.isFile).map(_.getPath.toString)
-        else Seq(st.getPath.toString)
+    ShardFiles.read(spark, paths, "readShards") { (raw, f) =>
+      tarEntries(raw, f).map { case (name, data) =>
+        val dot = name.lastIndexOf('.')
+        val (key, ext) = if (dot < 0) (name, "") else (name.take(dot), name.drop(dot + 1))
+        (f, key, ext, data)
       }
-    }.sorted
-    val kv = {
-      val it = conf.iterator(); val b = Array.newBuilder[(String, String)]
-      while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue }
-      b.result()
-    }
-    spark.createDataset(files)
-      .repartition(files.size.max(1))
-      .mapPartitions { it =>
-        val c = new org.apache.hadoop.conf.Configuration(false)
-        kv.foreach { case (k, v) => c.set(k, v) }
-        var open: java.io.InputStream = null
-        Option(org.apache.spark.TaskContext.get()).foreach(
-          _.addTaskCompletionListener[Unit] { _ =>
-            if (open != null) { try open.close() catch { case _: Exception => () } }
-          })
-        it.flatMap { f =>
-          val p = new org.apache.hadoop.fs.Path(f)
-          val raw = p.getFileSystem(c).open(p)
-          open = raw
-          tarEntries(raw, f).map { case (name, data) =>
-            val dot = name.lastIndexOf('.')
-            val (key, ext) = if (dot < 0) (name, "") else (name.take(dot), name.drop(dot + 1))
-            (f, key, ext, data)
-          }
-        }
-      }
-      .toDF("shard_file", "key", "ext", "payload")
+    }.toDF("shard_file", "key", "ext", "payload")
   }
 }

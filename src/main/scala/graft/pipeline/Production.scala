@@ -75,14 +75,8 @@ object Production {
     if (!reportsMigrated.contains(path)) {
       val p = new org.apache.hadoop.fs.Path(path)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val backup = new org.apache.hadoop.fs.Path(
-        p.getParent, s".precompact_${p.getName}")
-      if (!fs.exists(p) && fs.exists(backup)) {
-        // a crashed migration publish: the backup is authoritative —
-        // recover through the shared compact core before reading
-        val order = spark.read.parquet(backup.toString).columns.head
-        graft.io.Compaction.compactParquet(spark, path, Seq(order))
-      }
+      // a crashed migration publish: the backup is authoritative
+      graft.io.Compaction.recover(spark, path)
       if (fs.exists(p)) {
         val legacy = spark.read.parquet(path)
         if (!legacy.columns.contains("run_ts"))

@@ -1787,7 +1787,7 @@ object AnnIndex {
 
   /** The shared reshard core: crashed-swap recovery, tombstone-folded
     * union of the stored per-shard payloads, `build` into a staging
-    * sibling, non-index state carry, checked-rename publish. */
+    * sibling, non-index state carry, [[graft.io.Publish.swap]]. */
   private def reshardSwap(
       spark: SparkSession, dir: String, expectKind: String, newShards: Int)(
       build: (Meta, DataFrame, String) => Unit): Unit = {
@@ -1797,14 +1797,9 @@ object AnnIndex {
     val preshard = new Path(s"$dir.preshard")
     val staging = new Path(s"$dir.resharding")
     val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // recover a crashed swap: the old index is the authoritative copy
-    if (!fs.exists(live)) {
-      require(fs.exists(preshard),
-        s"reshard: no index at $dir and no .preshard backup to recover")
-      require(fs.rename(preshard, live),
-        s"reshard: recovery rename $preshard -> $live failed")
-    }
-    if (fs.exists(staging)) fs.delete(staging, true)
+    // a crashed swap leaves the authoritative old index in the backup
+    require(graft.io.Publish.recover(spark, live, staging, preshard),
+      s"reshard: no index at $dir and no .preshard backup to recover")
     val m = readMeta(spark, dir, expectKind)
     // pending tombstones fold here too: resharding rebuilds from the
     // stored payloads, and carrying a deleted row into a shard whose
@@ -1830,16 +1825,7 @@ object AnnIndex {
           spark.sparkContext.hadoopConfiguration),
           s"reshard: carrying $n into the resharded index failed")
     }
-    if (fs.exists(preshard)) fs.delete(preshard, true)
-    require(fs.rename(live, preshard),
-      s"reshard: publish rename $live -> $preshard failed")
-    require(fs.rename(staging, live),
-      s"reshard: publish rename $staging -> $live failed " +
-        s"(old index preserved at $preshard — rerun the reshard to recover)")
-    fs.delete(preshard, true)
-    // same stale-listing hazard as Compaction: a session that searched
-    // the old layout holds its file listing in the shared cache
-    spark.catalog.refreshByPath(dir)
+    graft.io.Publish.swap(spark, live, staging, preshard)
   }
 
   /** Sharded twin of [[ensureIvf]]. */

@@ -503,18 +503,12 @@ object Streaming {
     val path = s"$stateDir/maintenance_log.parquet"
     // the fold below makes this table subject to the compact publish's
     // crash window: a death between its two renames leaves the full
-    // history in the .precompact backup and no live table. The lane owns
-    // this log (single-maintainer contract) and the fold is automatic,
-    // so recovery is too — re-enter the compact core, which restores the
-    // backup before rewriting, instead of blind-appending a fresh table
-    // over the hole (which would silently orphan the history and wedge
-    // the NEXT fold on its published-marker check)
-    val live = new org.apache.hadoop.fs.Path(path)
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val backup = new org.apache.hadoop.fs.Path(
-      live.getParent, s".precompact_${live.getName}")
-    if (!fs.exists(live) && fs.exists(backup))
-      graft.io.Compaction.compactParquet(spark, path, Seq("batch_id"))
+    // history in the backup and no live table. The lane owns this log
+    // (single-maintainer contract) and the fold is automatic, so
+    // recovery is too — restore the backup instead of blind-appending a
+    // fresh table over the hole (which would silently orphan the history
+    // and wedge the NEXT fold on its published-marker check)
+    graft.io.Compaction.recover(spark, path)
     Seq((batchId, target, compacted, reason))
       .toDF("batch_id", "target", "compacted", "reason")
       .coalesce(1)

@@ -31,6 +31,8 @@ import org.apache.spark.sql.functions._
   */
 object Bpe {
 
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
   /** End-of-word sentinel, fused onto a word's last character. */
   val EndOfWord = "</w>"
 
@@ -172,15 +174,23 @@ object Bpe {
   /** The capped (word, count) table from a maintained state directory —
     * [[cappedWordCounts]] without touching any raw text. Fails when the
     * state was folded under a pre-tokenize mode other than `preTokenize`;
-    * a state folded before modes were recorded is not checked. */
+    * a state folded before modes were recorded is not checked, and a WARN
+    * says so. */
   def countsFromState(
       spark: SparkSession,
       statePath: String,
       maxWords: Int = 50000,
       preTokenize: String = Whitespace): Seq[(String, Long)] = {
-    for (folded <- graft.dp.IncrementalAgg.stateTag(spark, statePath) if folded != preTokenize)
-      throw new IllegalArgumentException(
-        s"word-count state $statePath was folded with pre_tokenize $folded, not $preTokenize")
+    graft.dp.IncrementalAgg.stateTag(spark, statePath) match {
+      case None =>
+        log.warn(s"word-count state $statePath: its pre_tokenize mode was never " +
+          s"recorded, so train cannot check it against $preTokenize; delete the " +
+          "state and fold again to get the check")
+      case Some(folded) if folded != preTokenize =>
+        throw new IllegalArgumentException(
+          s"word-count state $statePath was folded with pre_tokenize $folded, not $preTokenize")
+      case _ =>
+    }
     spark.read.parquet(statePath)
       .orderBy(col("n").desc, col("word").asc)
       .limit(maxWords)

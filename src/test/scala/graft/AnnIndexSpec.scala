@@ -1017,6 +1017,28 @@ class AnnIndexSpec extends SparkSpec {
     assert(e.getMessage.contains("kind"))
   }
 
+  test("reshardIvf: a crash between the swap renames is recovered by the next reshard") {
+    val dir = s"${tempDir("graft_ivf_reshard_crash")}/idx"
+    AnnIndex.buildIvfSharded(emb.filter(col("vec_id") < 300), "vec_id", "embedding",
+      dir, nShards = 2, nlist = 4, seed = 7L)
+    val queries = emb.filter(col("vec_id") < 5)
+    def search() = rows(
+      AnnIndex.searchIvfSharded(spark, dir, queries, "vec_id", "embedding",
+        k = 8, nprobe = 4).orderBy(col("query_id"), col("rank")))
+    val want = search()
+    // simulate the crash window: live renamed to the backup, the staged
+    // layout half-written and never published
+    import org.apache.hadoop.fs.Path
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.rename(new Path(dir), new Path(s"$dir.preshard")))
+    fs.create(new Path(s"$dir.resharding/shard=0/partial"), true).close()
+    intercept[Exception](search())
+    // the next reshard restores the backup first, then reshards normally
+    AnnIndex.reshardIvf(spark, dir, newShards = 3, nlist = 4)
+    assert(want.nonEmpty && search() === want)
+    assert(!fs.exists(new Path(s"$dir.preshard")) && !fs.exists(new Path(s"$dir.resharding")))
+  }
+
   test("reshardIvfPq: re-encode from the int8 refine payload — exhaustive refined answer identical") {
     // the contract rests on quantizer idempotence: re-quantizing a
     // dequantized payload reproduces codes and scale bit for bit (the

@@ -88,6 +88,28 @@ class CompactionSpec extends SparkSpec {
       "the backup (the authoritative table) must survive untouched")
   }
 
+  test("recover restores a crashed publish without compacting, so appends keep the history") {
+    import spark.implicits._
+    import org.apache.hadoop.fs.Path
+    val parent = Files.createTempDirectory("graft_compact_recover").toString
+    val dir = s"$parent/t.parquet"
+    (0L until 100L).map(i => (i, i)).toDF("id", "x")
+      .repartition(3).write.mode("append").parquet(dir)
+    val before = files(dir).toSet
+    Compaction.recover(spark, dir) // healthy table: a no-op
+    assert(files(dir).toSet === before)
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val backup = new Path(s"$parent/.precompact_t.parquet")
+    require(fs.rename(new Path(dir), backup))
+    fs.mkdirs(new Path(s"$parent/.compacting_t.parquet"))
+    Compaction.recover(spark, dir)
+    assert(files(dir).toSet === before, "recovery restores the files as they were")
+    assert(!fs.exists(backup) && !fs.exists(new Path(s"$parent/.compacting_t.parquet")))
+    Compaction.requireNoPendingPublish(spark, dir)
+    Seq((100L, 100L)).toDF("id", "x").write.mode("append").parquet(dir)
+    assert(spark.read.parquet(dir).count() === 101)
+  }
+
   test("a stale backup after a COMPLETED publish is cleaned, not fatal") {
     import spark.implicits._
     import org.apache.hadoop.fs.Path

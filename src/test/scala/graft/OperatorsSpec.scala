@@ -1767,4 +1767,25 @@ class OperatorsSpec extends SparkSpec {
     assert(!new java.io.File(s"$statePath.batchid").exists())
     assert(sumV == 5.0)
   }
+
+  test("foldStateDir: a crash between the swap renames is recovered by the next fold") {
+    import graft.dp.IncrementalAgg._
+    val dir = java.nio.file.Files.createTempDirectory("graft_fold_crash").toString
+    val statePath = s"$dir/state"
+    def sumV: Double = spark.read.parquet(statePath)
+      .selectExpr("cast(sum(sum_v) as double)").as[Double].head()
+    val batch3 = aggState(Seq((1L, 4.0)).toDF("k", "v"), "k", "v")
+    foldStateDir(spark, statePath,
+      aggState(Seq((1L, 1.0), (2L, 2.0)).toDF("k", "v"), "k", "v"), "k", batchId = 2L)
+    // batch 3's fold dies after `state -> state.old`, before its staged
+    // state is renamed in: the backup is the only copy of the history
+    assert(new java.io.File(statePath).renameTo(new java.io.File(s"$statePath.old")))
+    foldStateDir(spark, statePath, batch3, "k", batchId = 3L)
+    // the replayed batch lands on the restored history, not on an empty state
+    assert(sumV == 7.0)
+    assert(!new java.io.File(s"$statePath.old").exists())
+    assert(!new java.io.File(s"$statePath.tmp").exists())
+    foldStateDir(spark, statePath, batch3, "k", batchId = 3L) // replay: no-op
+    assert(sumV == 7.0)
+  }
 }

@@ -213,4 +213,33 @@ class WarcSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("no files match"))
   }
+
+  test("re-export to the same dir replaces stale shards (overwrite semantics)") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-warc-ow").toString
+    def rows(prefix: String, n: Int) = (0 until n).map(i =>
+      (s"http://$prefix.test/$i", new java.sql.Timestamp(0L), s"<urn:$prefix:$i>",
+        "text/plain", s"p$i".getBytes(StandardCharsets.UTF_8)))
+      .toDF("uri", "ts", "rid", "mime", "payload")
+    Warc.writeWarc(rows("b", 15).repartition(3), s"$dir/out",
+      "uri", "ts", "rid", "mime", "payload")
+    // fewer rows AND fewer partitions: a non-clearing writer would leave
+    // the old layout's extra shards behind
+    Warc.writeWarc(rows("s", 2).repartition(1), s"$dir/out",
+      "uri", "ts", "rid", "mime", "payload")
+    def uris() = Warc.readWarc(spark, Seq(s"$dir/out"))
+      .filter($"warc_type" === "response").select($"target_uri").as[String].collect().toSeq
+    assert(uris().sorted === Seq("http://s.test/0", "http://s.test/1"))
+    // SELF-REFERENTIAL re-export: the job reads the directory it replaces
+    val selfRef = Warc.readWarc(spark, Seq(s"$dir/out"))
+      .filter($"warc_type" === "response" && $"target_uri" === "http://s.test/0")
+      .select($"target_uri", $"warc_date", $"record_id", $"mime", $"payload")
+    Warc.writeWarc(selfRef, s"$dir/out", "target_uri", "warc_date", "record_id",
+      "mime", "payload")
+    assert(uris() === Seq("http://s.test/0"))
+    assert(!new java.io.File(s"$dir/out").listFiles().exists(_.getName.startsWith(".staging")))
+    // an empty re-export writes no shard, and still replaces the old ones
+    Warc.writeWarc(rows("e", 0), s"$dir/out", "uri", "ts", "rid", "mime", "payload")
+    assert(uris().isEmpty)
+  }
 }

@@ -113,4 +113,26 @@ class WebDatasetSpec extends SparkSpec {
       WebDataset.tarEntries(new java.io.ByteArrayInputStream(cut), "mem").toSeq
     }
   }
+
+  test("re-export to the same dir replaces stale shards (overwrite semantics)") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-wds-ow").toString
+    def rows(prefix: String, n: Int) =
+      (0 until n).map(i => (f"$prefix$i%05d", s"t$i")).toDF("key", "text")
+    WebDataset.writeShards(rows("b", 25).repartition(2), s"$dir/out", "key",
+      Seq("text" -> "txt"), rowsPerShard = 5)
+    // fewer rows AND fewer partitions: the old layout has strictly more
+    // shard files — a non-clearing writer would leave them behind
+    WebDataset.writeShards(rows("s", 3).repartition(1), s"$dir/out", "key",
+      Seq("text" -> "txt"), rowsPerShard = 5)
+    def keys() = WebDataset.readShards(spark, Seq(s"$dir/out"))
+      .select($"key").as[String].collect().toSet
+    assert(keys() === Set("s00000", "s00001", "s00002"))
+    // SELF-REFERENTIAL re-export: the job reads the directory it replaces
+    val selfRef = WebDataset.readShards(spark, Seq(s"$dir/out"))
+      .filter($"key" < "s00002")
+      .select($"key", decode($"payload", "UTF-8").as("text"))
+    WebDataset.writeShards(selfRef, s"$dir/out", "key", Seq("text" -> "txt"))
+    assert(keys() === Set("s00000", "s00001"))
+    assert(!new java.io.File(s"$dir/out").listFiles().exists(_.getName.startsWith(".staging")))
+  }
 }
