@@ -1,5 +1,6 @@
 package graft
 
+import graft.obs.Json
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every SparkEntry query against SPARK_GRAFT_SF_DIR
@@ -26,10 +27,9 @@ import org.apache.spark.sql.SparkSession
   *   - a query that throws is recorded with time -1 (never confused with
   *     a fast success), and the error count + names are in the output;
   *   - transient ambient load (e.g. a prior `sbt test` Spark JVM still
-  *     shutting down when the driver chains build steps) is guarded twice:
-  *     startup waits for the 1-minute load average to drop, and a cold run
-  *     measuring implausibly slower than its warm twin is re-measured once
-  *     (still against a cold cache) and the faster attempt reported.
+  *     shutting down when build steps are chained) is guarded per query: a cold run measuring implausibly slower than its warm twin
+  *     is re-measured once (still against a cold cache) and the faster
+  *     attempt reported.
   */
 object Bench {
 
@@ -38,34 +38,59 @@ object Bench {
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
   }
 
-  /** Wait (bounded) for system load to settle so a previous build step's
-    * dying JVM doesn't contaminate the first measurements. */
-  private def awaitQuietMachine(maxWaitSec: Int = 240): Unit = {
-    val cpus = Runtime.getRuntime.availableProcessors()
-    val deadline = System.nanoTime() + maxWaitSec * 1e9.toLong
-    var load = ManagementFactoryLoad()
-    while (load > cpus / 2.0 && System.nanoTime() < deadline) {
-      System.err.println(f"[bench] load average $load%.1f > ${cpus / 2} — waiting for machine to settle")
-      Thread.sleep(5000)
-      load = ManagementFactoryLoad()
-    }
-  }
+  /** One query's measurement. cold is the first cold attempt, coldMin
+    * the headline min of two, warm the min of two; all three and rows are
+    * -1 for a query that threw. io is (shuffle read, shuffle write,
+    * spilled) bytes of the headline run. */
+  final case class Result(
+      name: String,
+      cold: Double,
+      coldMin: Double,
+      warm: Double,
+      rows: Long,
+      io: (Long, Long, Long),
+      err: Option[String])
 
-  private def ManagementFactoryLoad(): Double =
-    java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
+  /** `BENCH_DETAIL.json`: every query's times, rows and IO. */
+  def detailJson(sfDir: String, results: Seq[Result]): String = Json.render(Json.obj(
+    "sf" -> sfDir, "n_queries" -> results.size, "n_failed" -> results.count(_.cold < 0),
+    "total" -> total(results, _.coldMin), "total_first_cold" -> total(results, _.cold),
+    "total_warm" -> total(results, _.warm),
+    "queries" -> Json.obj(results.map(r => r.name -> Json.obj(
+      "cold" -> Json.sec(r.cold), "cold_min" -> Json.sec(r.coldMin), "warm" -> Json.sec(r.warm),
+      "rows" -> r.rows, "shuffle_read" -> r.io._1, "shuffle_write" -> r.io._2, "spilled" -> r.io._3)): _*),
+    "errors" -> errors(results)))
+
+  /** The stdout line. It carries only the headline queries' cold_min: a
+    * harness that keeps a bounded tail of the build output recorded
+    * `parsed: null` in BENCH_r01..r03, because the full 76-query line
+    * (~4.5 KB) overflowed that window. The headline line is ~1 KB and
+    * survives; BENCH_DETAIL.json keeps the rest reviewable. */
+  def headlineJson(sfDir: String, results: Seq[Result]): String = Json.render(Json.obj(
+    "metric" -> "total", "value" -> total(results, _.coldMin), "unit" -> "sec",
+    "queries" -> Json.obj(results.filter(r => headline(r.name)).map(r => r.name -> Json.sec(r.coldMin)): _*),
+    "total_first_cold" -> total(results, _.cold), "total_warm" -> total(results, _.warm),
+    "sf" -> sfDir, "n_queries" -> results.size, "n_failed" -> results.count(_.cold < 0),
+    "errors" -> errors(results), "detail" -> "BENCH_DETAIL.json"))
+
+  /** Every op BASELINE.md times, plus the heavy LLM-pipeline ops. */
+  private val headline = Set(
+    "check_consistency", "missing_counts", "join_chain", "e1_feature_pipeline",
+    "impute_mean", "impute_mode", "stratified_split", "correlation_matrix",
+    "outlier_bounds", "onehot_encoding", "target_encoding", "binary_metrics",
+    "set_analysis", "dedup_exact", "dedup_minhash", "dedup_cluster_survivors",
+    "lang_id", "cosine_topk", "ann_lsh_topk", "iv_table", "ngram_jaccard",
+    "sequence_packing", "line_dedup", "curation_e2e", "ann_ivf_search",
+    "ann_ivf_filtered")
+
+  private def total(results: Seq[Result], time: Result => Double) =
+    Json.sec(results.filter(_.cold >= 0).map(time).sum)
+  private def errors(results: Seq[Result]) =
+    Json.obj(results.filter(_.cold < 0).map(r => r.name -> r.err.getOrElse("").take(120)): _*)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-
-    final case class R(
-        name: String,
-        cold: Double,
-        coldMin: Double,
-        warm: Double,
-        rows: Long,
-        io: (Long, Long, Long),
-        err: Option[String])
 
     // stage-level IO accounting: shuffle read/write + disk spill bytes per
     // query (the "did this plan shuffle more than it had to" number the
@@ -103,7 +128,6 @@ object Bench {
     val recycleEvery =
       sys.env.getOrElse("SPARK_GRAFT_RECYCLE_EVERY", "40").toInt
 
-    awaitQuietMachine()
     var spark = newSession()
 
     // SPARK_GRAFT_BENCH_ONLY=q1,q2 restricts the run to a comma-separated
@@ -128,7 +152,7 @@ object Bench {
     val ordered = selected.filterNot(q => heavyLane(q._1)) ++
       selected.filter(q => heavyLane(q._1))
     var sinceRecycle = 0
-    val results: Seq[R] =
+    val results: Seq[Result] =
       ordered.map { case (name, fn) =>
         if (sinceRecycle >= recycleEvery ||
             (heavyLane(name) && sinceRecycle > 0)) {
@@ -195,58 +219,18 @@ object Bench {
             }
           }
           clearState(spark)
-          R(name, cold0, coldMin, warm, n, io, None)
+          Result(name, cold0, coldMin, warm, n, io, None)
         } catch {
           case e: Throwable =>
-            R(name, -1.0, -1.0, -1.0, -1L, (0L, 0L, 0L), Some(Option(e.getMessage).getOrElse(e.getClass.getName)))
+            Result(name, -1.0, -1.0, -1.0, -1L, (0L, 0L, 0L), Some(Option(e.getMessage).getOrElse(e.getClass.getName)))
         }
       }
 
-    val ok = results.filter(_.cold >= 0)
     val failed = results.filter(_.cold < 0)
-    def f3(d: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, d)
-    def timesJson(rs: Seq[R], f: R => Double): String =
-      rs.map(r => "\"" + r.name + "\":" + f3(f(r))).mkString("{", ",", "}")
-    val errs = failed
-      .map(r => "\"" + r.name + "\":\"" + graft.pipeline.Tracking.esc(r.err.getOrElse("").take(120)) + "\"")
-      .mkString("{", ",", "}")
-    val total = ok.map(_.coldMin).sum
-    val totalFirstCold = ok.map(_.cold).sum
-    val totalWarm = ok.map(_.warm).sum
     failed.foreach(r => System.err.println(s"[bench] FAILED ${r.name}: ${r.err.getOrElse("")}"))
-
-    // Full per-query detail (cold + warm + rows for all queries) goes to a
-    // file; the stdout line carries only the BASELINE.md-mapped headline
-    // queries. The driver captures a bounded tail of the build output —
-    // BENCH_r01..r03 all recorded `parsed: null` because the full 76-query
-    // line (~4.5 KB) overflowed that window, so the only machine-readable
-    // bench artifact was a truncated string. The headline line is ~1 KB and
-    // survives; BENCH_DETAIL.json keeps the rest reviewable.
-    val detail = results
-      .map(r =>
-        "\"" + r.name + "\":{\"cold\":" + f3(r.cold) + ",\"cold_min\":" + f3(r.coldMin) +
-          ",\"warm\":" + f3(r.warm) +
-          ",\"rows\":" + r.rows +
-          ",\"shuffle_read\":" + r.io._1 + ",\"shuffle_write\":" + r.io._2 +
-          ",\"spilled\":" + r.io._3 + "}")
-      .mkString("{", ",", "}")
-    val detailPath = java.nio.file.Paths.get("BENCH_DETAIL.json")
     java.nio.file.Files.write(
-      detailPath,
-      s"""{"sf":"$sfDir","n_queries":${results.size},"n_failed":${failed.size},"total":${f3(total)},"total_first_cold":${f3(totalFirstCold)},"total_warm":${f3(totalWarm)},"queries":$detail,"errors":$errs}""".getBytes("UTF-8"))
-
-    // Headline = every op BASELINE.md times, plus the heavy LLM-pipeline ops.
-    val headline = Seq(
-      "check_consistency", "missing_counts", "join_chain", "e1_feature_pipeline",
-      "impute_mean", "impute_mode", "stratified_split", "correlation_matrix",
-      "outlier_bounds", "onehot_encoding", "target_encoding", "binary_metrics",
-      "set_analysis", "dedup_exact", "dedup_minhash", "dedup_cluster_survivors",
-      "lang_id", "cosine_topk", "ann_lsh_topk", "iv_table", "ngram_jaccard",
-      "sequence_packing", "line_dedup", "curation_e2e", "ann_ivf_search",
-      "ann_ivf_filtered")
-    val head = results.filter(r => headline.contains(r.name))
-    println(
-      s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":${timesJson(head, _.coldMin)},"total_first_cold":${f3(totalFirstCold)},"total_warm":${f3(totalWarm)},"sf":"$sfDir","n_queries":${results.size},"n_failed":${failed.size},"errors":$errs,"detail":"BENCH_DETAIL.json"}""")
+      java.nio.file.Paths.get("BENCH_DETAIL.json"), detailJson(sfDir, results).getBytes("UTF-8"))
+    println(headlineJson(sfDir, results))
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)
   }

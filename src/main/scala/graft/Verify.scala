@@ -17,12 +17,7 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // a raw control char in a query's SQL would make oracle_sql.json
-    // invalid JSON and fail the whole DuckDB compare
-    def q(s: String): String = "\"" + graft.pipeline.Tracking.esc(s) + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), graft.obs.Json.render(SparkEntry.oracleSql))
     spark.stop()
   }
 }

@@ -24,20 +24,20 @@ object Production {
     "last_view_date_diff", "total_view_value",
     "last_purchase_date_diff", "total_purchase_value")
 
-  /** Zone write with an optional pre-flight scale audit: with
-    * `core.audit_plans: true`, every frame a job is about to persist must
-    * pass [[graft.plans.PlanAudit.assertScaleSafe]] — a stage that
+  /** The optional pre-flight scale audit of every frame a job is about
+    * to persist: with `core.audit_plans: true`, the frame must pass
+    * [[graft.plans.PlanAudit.assertScaleSafe]] — a stage that
     * accidentally introduces a global window / cartesian / one-partition
     * funnel fails LOUDLY at submission instead of melting on the cluster.
     * The audit inspects the optimized plan only; nothing is executed
     * twice. */
-  private def save(
-      ctx: Context,
-      df: DataFrame,
-      path: String,
-      allow: Set[String] = Set.empty): Unit = {
+  private def audit(ctx: Context, df: DataFrame, allow: Set[String] = Set.empty): Unit =
     if (Context.dig(ctx.config, "core.audit_plans").exists(_.toString.toBoolean))
       graft.plans.PlanAudit.assertScaleSafe(df, allow = allow)
+
+  /** Zone write behind the [[audit]]. */
+  private def save(ctx: Context, df: DataFrame, path: String, allow: Set[String] = Set.empty): Unit = {
+    audit(ctx, df, allow)
     Tables.saveData(df, path)
   }
 
@@ -69,8 +69,7 @@ object Production {
       df: DataFrame,
       path: String): Unit = {
     import org.apache.spark.sql.functions.{current_timestamp, lit}
-    if (Context.dig(ctx.config, "core.audit_plans").exists(_.toString.toBoolean))
-      graft.plans.PlanAudit.assertScaleSafe(df)
+    audit(ctx, df)
     val spark = ctx.spark
     if (!reportsMigrated.contains(path)) {
       val p = new org.apache.hadoop.fs.Path(path)

@@ -3,6 +3,8 @@ package graft.pipeline
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
+import graft.obs.Json
+
 /** Minimal experiment tracking: one JSON line per executed task appended to
   * a run log (reference: src/ta_lib/pyspark/tracking.py wraps every task in
   * an mlflow run with params/metrics/wall time; the mlflow server is
@@ -20,38 +22,15 @@ object Tracking {
       params: Map[String, Any],
       error: Option[String] = None)
 
-  /** JSON string-body escape: quote, backslash, and every control char
-    * below 0x20. Bench and Verify use it for their JSON output too. */
-  private[graft] def esc(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-
-  private def jsonValue(v: Any): String = v match {
-    case null => "null"
-    case b: Boolean => b.toString
-    case n: Byte => n.toString
-    case n: Short => n.toString
-    case n: Int => n.toString
-    case n: Long => n.toString
-    case n: Float => n.toString
-    case n: Double => n.toString
-    case n: java.math.BigDecimal => n.toString
-    case other => "\"" + esc(other.toString) + "\""
-  }
-
+  /** The record as one JSON line. Params are sorted by key; YAML list
+    * and map params are JSON arrays and objects; `error` is present only
+    * on a failed task. */
   def toJson(r: RunRecord, tsMillis: Long): String = {
-    val params = r.params.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + esc(k) + "\":" + jsonValue(v) }
-      .mkString("{", ",", "}")
-    val err = r.error.map(e => ",\"error\":\"" + esc(e) + "\"").getOrElse("")
-    s"""{"ts_ms":$tsMillis,"job":"${esc(r.job)}","stage":"${esc(r.stage)}","task":"${esc(r.task)}","status":"${esc(r.status)}","wall_sec":${r.wallSec},"params":$params$err}"""
+    val fields = Seq(
+      "ts_ms" -> tsMillis, "job" -> r.job, "stage" -> r.stage, "task" -> r.task,
+      "status" -> r.status, "wall_sec" -> r.wallSec,
+      "params" -> Json.obj(r.params.toSeq.sortBy(_._1): _*))
+    Json.render(Json.obj(fields ++ r.error.map("error" -> _): _*))
   }
 
   /** Append the record to the JSONL run log, creating parent dirs. */

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.Training
+import graft.obs.Json
 import graft.similarity.AnnIndex
 
 /** Sizes the driver-local gates: times each gated operator at its default
@@ -44,7 +45,7 @@ object GateBench {
       run(0)
       for (_ <- 1 to reps; (side, bound) <- Seq("gated" -> gatedBound, "spark" -> 0L)) {
         val (local, rec) = telemetry.measure(run(bound))
-        println(f"""{"op": "$op", "size": $size, "side": "$side", "wall_s": ${rec.sec}%.3f, "jobs": ${rec.jobs.size}, "local": $local}""")
+        println(Json.render(Json.obj("op" -> op, "size" -> size, "side" -> side, "wall_s" -> Json.sec(rec.sec), "jobs" -> rec.jobs.size, "local" -> local)))
       }
     }
     try {
@@ -107,7 +108,7 @@ object GateBench {
     }
     val op = if (sharded) "ivf_sharded" else "ivf"
     val under = math.max(1L, gatedBound / queryBytes)
-    println(s"""{"op": "$op", "vectors": $n, "dims": $dims, "pool_bytes_per_query": $queryBytes, "bound": $gatedBound}""")
+    println(Json.render(Json.obj("op" -> op, "vectors" -> n, "dims" -> dims, "pool_bytes_per_query" -> queryBytes, "bound" -> gatedBound)))
     for (nq <- Seq(under, under + 1)) {
       val queries = vectors(nq, 1L << 40, 5000L).persist()
       queries.count()

@@ -1,5 +1,6 @@
 package graft.tools
 import graft.Sessions
+import graft.obs.Json
 
 /** How long a query takes and where the time goes (r20 optimization round).
   *
@@ -39,7 +40,7 @@ object JobProfile {
         telemetry.measure(fn(spark, dir).count())._2
       }
       val times = measured.map(_.sec)
-      println(f"""{"query":"$name","min_sec":${times.min}%.3f,"median_sec":${times.sorted.apply(reps / 2)}%.3f,"runs":[${times.map(t => f"$t%.3f").mkString(",")}]}""")
+      println(Json.render(Json.obj("query" -> name, "min_sec" -> Json.sec(times.min), "median_sec" -> Json.sec(times.sorted.apply(reps / 2)), "runs" -> times.map(Json.sec))))
       val rec = measured.minBy(_.sec)
       println(f"=== $name fastest=${rec.sec}%.2fs jobs=${rec.jobs.size}")
       var prevEnd = rec.start

@@ -3,6 +3,7 @@ package graft.tools
 import java.nio.file.{Files, Paths}
 
 import graft.dedup.Dedup
+import graft.obs.Json
 import graft.similarity.Similarity
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -59,10 +60,9 @@ object Recall {
     * just the round artifact. */
   def run(spark: SparkSession, sfDir: String, out: String): Unit = {
     val all = measure(spark, sfDir)
-    val json = all.map { e =>
-      f""""${e.name}": {"recall": ${e.recall}%.4f, "exact_pairs": ${e.exactPairs}, "found_of_exact": ${e.foundOfExact}, "min_bound": ${e.minBound}, "note": "${e.note}"}"""
-    }.mkString("{\n  \"sf_dir\": \"" + sfDir + "\",\n  ", ",\n  ", "\n}")
-    Files.writeString(Paths.get(out), json)
+    Files.writeString(Paths.get(out), Json.render(Json.obj(("sf_dir" -> sfDir) +: all.map(e => e.name -> Json.obj(
+      "recall" -> Json.fixed(e.recall, 4), "exact_pairs" -> e.exactPairs, "found_of_exact" -> e.foundOfExact,
+      "min_bound" -> e.minBound, "note" -> e.note)): _*)))
     all.foreach(e => println(f"${e.name}%-28s recall=${e.recall}%.4f (${e.foundOfExact}/${e.exactPairs}, bound ${e.minBound})"))
     val failed = all.filter(e => e.recall < e.minBound)
     if (failed.nonEmpty)

@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.obs.Json
+
 /** One-off scaling-curve measurement: how do the heavy operators behave
   * from sf0.01 → sf0.1 → sf1?
   *
@@ -310,7 +312,7 @@ object ScaleBench {
         .select("query_id", "vec_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       val bruteSec = (System.nanoTime() - tb0) / 1e9
-      println(f"""{"query":"cap_lift_brute","sf":"$sfName","sec":$bruteSec%.3f,"rows":${truth.size}}""")
+      println(Json.render(Json.obj("query" -> "cap_lift_brute", "sf" -> sfName, "sec" -> Json.sec(bruteSec), "rows" -> truth.size)))
       // third config: uncapped cells at the OLD CAP's candidate budget
       // (nprobe raised so probes·N/cells ~= the capped volume) — the
       // "finer cells at equal work" comparison
@@ -348,7 +350,7 @@ object ScaleBench {
         val cand = qProbes.join(occ, Seq("__cell"))
           .agg(sum(col("count"))).head().getLong(0) / 50.0
         val recall = (truth & got).size.toDouble / math.max(1, truth.size)
-        println(f"""{"query":"cap_lift_$label","sf":"$sfName","nlist":$actualCells,"nprobe":$probes,"fit_sec":$fitSec%.3f,"assign_sec":$assignSec%.3f,"search_sec":$searchSec%.3f,"candidates_per_query":$cand%.0f,"recall":$recall%.4f}""")
+        println(Json.render(Json.obj("query" -> s"cap_lift_$label", "sf" -> sfName, "nlist" -> actualCells, "nprobe" -> probes, "fit_sec" -> Json.sec(fitSec), "assign_sec" -> Json.sec(assignSec), "search_sec" -> Json.sec(searchSec), "candidates_per_query" -> Json.fixed(cand, 0), "recall" -> Json.fixed(recall, 4))))
         assigned.unpersist(true)
       }
     }
@@ -398,7 +400,7 @@ object ScaleBench {
         .select("query_id", "vec_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       val bruteSec = (System.nanoTime() - tb0) / 1e9
-      println(f"""{"query":"cap_recall_brute","sf":"$sfName","sec":$bruteSec%.3f,"rows":${truth.size}}""")
+      println(Json.render(Json.obj("query" -> "cap_recall_brute", "sf" -> sfName, "sec" -> Json.sec(bruteSec), "rows" -> truth.size)))
       val cells = Similarity.ivfAutoNlist(nRows, dims = 32)
       val autoProbes = Similarity.ivfAutoNprobe(cells, nRows, 10)
       val norm = Similarity.ivfNormalizedCorpus(corpus, "vec_id", "vec")
@@ -420,7 +422,7 @@ object ScaleBench {
           .map(r => (r.getLong(0), r.getLong(1))).toSet
         val searchSec = (System.nanoTime() - ts0) / 1e9
         val recall = (truth & got).size.toDouble / math.max(1, truth.size)
-        println(f"""{"query":"cap_recall_$label","sf":"$sfName","nlist":$cells,"nprobe":$probes,"n_queries":$nQ,"fit_sec":$fitSec%.3f,"search_sec":$searchSec%.3f,"recall":$recall%.4f}""")
+        println(Json.render(Json.obj("query" -> s"cap_recall_$label", "sf" -> sfName, "nlist" -> cells, "nprobe" -> probes, "n_queries" -> nQ, "fit_sec" -> Json.sec(fitSec), "search_sec" -> Json.sec(searchSec), "recall" -> Json.fixed(recall, 4))))
         if (label == "auto")
           require(recall >= CapRecallAutoBound,
             f"cap-recall GATE: auto point (nlist=$cells, nprobe=$probes) " +
@@ -468,7 +470,7 @@ object ScaleBench {
         else
           AnnIndex.searchIvfSharded(spark, out, queries, "vec_id", "vec", k = 10).count()
       val searchSec = (System.nanoTime() - ts0) / 1e9
-      println(f"""{"query":"shard_fit_$label","sf":"n20m","n_shards":$nShards,"build_sec":$buildSec%.3f,"search_sec":$searchSec%.3f,"rows":$got}""")
+      println(Json.render(Json.obj("query" -> s"shard_fit_$label", "sf" -> "n20m", "n_shards" -> nShards, "build_sec" -> Json.sec(buildSec), "search_sec" -> Json.sec(searchSec), "rows" -> got)))
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
     }
   }
@@ -512,12 +514,12 @@ object ScaleBench {
       if (phase == "compacted") {
         val t0 = System.nanoTime()
         AnnIndex.compact(spark, out)
-        println(f"""{"query":"compact_run","sec":${(System.nanoTime() - t0) / 1e9}%.3f}""")
+        println(Json.render(Json.obj("query" -> "compact_run", "sec" -> Json.sec((System.nanoTime() - t0) / 1e9))))
       }
       val f = files()
       val (cold, rows) = searchSec()
       val (warm, _) = searchSec()
-      println(f"""{"query":"compaction_decay_$phase","files":$f,"search_cold_sec":$cold%.3f,"search_warm_sec":$warm%.3f,"rows":$rows}""")
+      println(Json.render(Json.obj("query" -> s"compaction_decay_$phase", "files" -> f, "search_cold_sec" -> Json.sec(cold), "search_warm_sec" -> Json.sec(warm), "rows" -> rows)))
     }
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
   }
@@ -549,13 +551,13 @@ object ScaleBench {
     AnnIndex.reshardIvf(spark, idx, newShards = 4)
     val reshardSec = (System.nanoTime() - t0) / 1e9
     val post = search()
-    println(f"""{"query":"reshard_2_to_4","sec":$reshardSec%.3f,"index_bytes_read":${du(idx)},"source_bytes_avoided":${du(dir)},"rows_pre":$pre,"rows_post":$post}""")
+    println(Json.render(Json.obj("query" -> "reshard_2_to_4", "sec" -> Json.sec(reshardSec), "index_bytes_read" -> du(idx), "source_bytes_avoided" -> du(dir), "rows_pre" -> pre, "rows_post" -> post)))
     val fresh = "/tmp/graft_reshard_fresh"
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(fresh))
     val t1 = System.nanoTime()
     AnnIndex.buildIvfSharded(corpus, "vec_id", "vec", fresh, nShards = 4,
       quantize = true)
-    println(f"""{"query":"fresh_build_4","sec":${(System.nanoTime() - t1) / 1e9}%.3f}""")
+    println(Json.render(Json.obj("query" -> "fresh_build_4", "sec" -> Json.sec((System.nanoTime() - t1) / 1e9))))
     Seq(idx, fresh).foreach(p =>
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(p)))
   }
@@ -640,7 +642,8 @@ object ScaleBench {
     val secCoprime = reshardTo(3)
     val skewAfter = skewNow()
     val st = AnnIndex.stats(spark, idx).head()
-    println(f"""{"query":"reshard_rehearsal","n_rows":${st.getAs[Long]("n_rows")},"skew_before":$skewBefore%.2f,"skew_same_factor_4":$skewSame%.2f,"sec_same_factor":$secSame%.3f,"skew_coprime_3":$skewAfter%.2f,"sec_coprime":$secCoprime%.3f,"results_identical":true}""")
+    println(Json.render(Json.obj("query" -> "reshard_rehearsal", "n_rows" -> st.getAs[Long]("n_rows"), "skew_before" -> Json.fixed(skewBefore, 2), "skew_same_factor_4" -> Json.fixed(skewSame, 2),
+      "sec_same_factor" -> Json.sec(secSame), "skew_coprime_3" -> Json.fixed(skewAfter, 2), "sec_coprime" -> Json.sec(secCoprime), "results_identical" -> true)))
     // 3. the gate: acting on the (coprime) recommendation actually fixed
     // what the signal measured
     require(skewAfter < 2.0,
@@ -720,7 +723,7 @@ object ScaleBench {
       if (label == "old_window") oldCells = got
       else require(got == oldCells,
         "append-probe: the map-only assignment diverged from the window shape")
-      println(f"""{"query":"append_assign_$label","nlist":4096,"batch":${got.size},"sec":${rec.sec}%.3f,"shuffle_read":${rec.shuffleRead},"shuffle_write":${rec.shuffleWrite}}""")
+      println(Json.render(Json.obj("query" -> s"append_assign_$label", "nlist" -> 4096, "batch" -> got.size, "sec" -> Json.sec(rec.sec), "shuffle_read" -> rec.shuffleRead, "shuffle_write" -> rec.shuffleWrite)))
     }
     corpusVec.unpersist(true)
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(idx))
@@ -755,13 +758,13 @@ object ScaleBench {
             .select(col("vec_id")))
       }
       val times = (1 to 3).map(_ => searchSec()._1)
-      println(f"""{"query":"tombstone_search_$label","pending":$tombs,"min_sec":${times.min}%.3f}""")
+      println(Json.render(Json.obj("query" -> s"tombstone_search_$label", "pending" -> tombs, "min_sec" -> Json.sec(times.min))))
     }
     val t0 = System.nanoTime()
     AnnIndex.compact(spark, idx)
-    println(f"""{"query":"tombstone_fold","sec":${(System.nanoTime() - t0) / 1e9}%.3f,"rows_after":${spark.read.parquet(s"$idx/corpus.parquet").count()}}""")
+    println(Json.render(Json.obj("query" -> "tombstone_fold", "sec" -> Json.sec((System.nanoTime() - t0) / 1e9), "rows_after" -> spark.read.parquet(s"$idx/corpus.parquet").count())))
     val post = (1 to 3).map(_ => searchSec()._1).min
-    println(f"""{"query":"tombstone_search_postfold","min_sec":$post%.3f}""")
+    println(Json.render(Json.obj("query" -> "tombstone_search_postfold", "min_sec" -> Json.sec(post))))
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(idx))
   }
 
@@ -863,9 +866,8 @@ object ScaleBench {
       val runs = (1 to 3).map(_ => searchOnce())
       val searchSec = runs.map(_._1).min
       val recall = (truth & runs.head._2).size.toDouble / math.max(1, truth.size)
-      val covJson = covByMult
-        .map { case (m, c) => f""""x$m":$c%.4f""" }.mkString(",")
-      println(f"""{"query":"shard_sweep","n_shards":$s,"n_rows":$nRows,"n_queries":$nQ,"build_sec":$buildSec%.1f,"deployed_probes_per_shard":$deployedProbes,"coverage":{$covJson},"cand_rows_per_query":$candPerQ%.1f,"search_sec":$searchSec%.3f,"recall":$recall%.4f,"bound":$PqShardedAutoBound}""")
+      println(Json.render(Json.obj("query" -> "shard_sweep", "n_shards" -> s, "n_rows" -> nRows, "n_queries" -> nQ, "build_sec" -> Json.fixed(buildSec, 1), "deployed_probes_per_shard" -> deployedProbes,
+        "coverage" -> Json.obj(covByMult.map { case (m, c) => s"x$m" -> Json.fixed(c, 4) }: _*), "cand_rows_per_query" -> Json.fixed(candPerQ, 1), "search_sec" -> Json.sec(searchSec), "recall" -> Json.fixed(recall, 4), "bound" -> PqShardedAutoBound)))
       if (recall < PqShardedAutoBound)
         failures += f"S=$s recall $recall%.4f < $PqShardedAutoBound"
     }
@@ -947,12 +949,12 @@ object ScaleBench {
       val searchSec = runs.map(_._1).min
       val got = runs.head._2
       val recall = (truth & got).size.toDouble / math.max(1, truth.size)
-      println(f"""{"query":"pq_sharded_auto","sf":"$sfName","n_shards":4,"nlist_total":$nlistSum,"n_queries":$nQ,"build_sec":$buildSec%.3f,"search_sec":$searchSec%.3f,"cand_rows_per_query":$candPerQ%.1f,"recall":$recall%.4f}""")
+      println(Json.render(Json.obj("query" -> "pq_sharded_auto", "sf" -> sfName, "n_shards" -> 4, "nlist_total" -> nlistSum, "n_queries" -> nQ, "build_sec" -> Json.sec(buildSec), "search_sec" -> Json.sec(searchSec), "cand_rows_per_query" -> Json.fixed(candPerQ, 1), "recall" -> Json.fixed(recall, 4))))
       require(recall >= PqShardedAutoBound,
         f"pq-sharded-decade GATE: deployed config (4-shard PQ, refine auto, " +
           f"probes auto) recall $recall%.4f < $PqShardedAutoBound at $sfName")
       prev.foreach { case (s20, c20) =>
-        println(f"""{"query":"pq_sharded_decade_slope","search_sec_ratio":${searchSec / s20}%.2f,"cand_ratio":${candPerQ / c20}%.2f}""")
+        println(Json.render(Json.obj("query" -> "pq_sharded_decade_slope", "search_sec_ratio" -> Json.fixed(searchSec / s20, 2), "cand_ratio" -> Json.fixed(candPerQ / c20, 2))))
       }
       prev = Some((searchSec, candPerQ))
     }
@@ -982,7 +984,7 @@ object ScaleBench {
     val idx = s"$work/idx"
     val t0 = System.nanoTime()
     AnnIndex.buildIvf(all.filter(col("vec_id") < 1000000L), "vec_id", "vec", idx)
-    println(f"""{"query":"interleave_build","sec":${(System.nanoTime() - t0) / 1e9}%.3f,"rows":1000000}""")
+    println(Json.render(Json.obj("query" -> "interleave_build", "sec" -> Json.sec((System.nanoTime() - t0) / 1e9), "rows" -> 1000000)))
     implicit val sqlCtx = spark.sqlContext
     def batchRows(lo: Long, hi: Long): Seq[(Long, Seq[Double])] = all
       .filter(col("vec_id") >= lo && col("vec_id") < hi)
@@ -1028,7 +1030,7 @@ object ScaleBench {
     appendIn.addData(batchRows(1020000L, 1030000L))
     aq.processAllAvailable()
     aq.stop()
-    println(f"""{"query":"interleave_drive","sec":${(System.nanoTime() - ta0) / 1e9}%.3f,"appended":30000,"retracted":2000,"restarts":1}""")
+    println(Json.render(Json.obj("query" -> "interleave_drive", "sec" -> Json.sec((System.nanoTime() - ta0) / 1e9), "appended" -> 30000, "retracted" -> 2000, "restarts" -> 1)))
     // final served truth: base + appends − retractions, no duplicates
     val stored = spark.read.parquet(s"$idx/corpus.parquet").select(col("vec_id"))
     val n = stored.count()
@@ -1046,7 +1048,7 @@ object ScaleBench {
     require(served.get(500L + 5000000L) != Some(500L) &&
       served.get(1000500L + 5000000L) != Some(1000500L),
       s"interleave GATE: retracted ids must not serve, got $served")
-    println("""{"query":"interleave_replay_idempotence","ok":true}""")
+    println(Json.render(Json.obj("query" -> "interleave_replay_idempotence", "ok" -> true)))
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(work))
   }
 
@@ -1181,12 +1183,9 @@ object ScaleBench {
       val best = times.map(_._1).min
       results.getOrElseUpdate(qname, scala.collection.mutable.LinkedHashMap.empty)
         .update(sfName, best)
-      println(f"""{"query":"$qname","sf":"$sfName","sec":$best%.3f,"rows":${times.head._2}}""")
+      println(Json.render(Json.obj("query" -> qname, "sf" -> sfName, "sec" -> Json.sec(best), "rows" -> times.head._2)))
     }
-    val summary = results.map { case (q, m) =>
-      s""""$q":{${m.map { case (sf, t) => f""""$sf":$t%.3f""" }.mkString(",")}}"""
-    }.mkString("{", ",", "}")
-    println(s"""SCALE_SUMMARY $summary""")
+    println("SCALE_SUMMARY " + Json.render(results.map { case (q, m) => q -> m.map { case (sf, t) => sf -> Json.sec(t) } }))
     spark.stop()
   }
 }

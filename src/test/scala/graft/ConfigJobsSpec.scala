@@ -35,12 +35,15 @@ class ConfigJobsSpec extends AnyFunSuite {
             "name" -> "tstage",
             "tasks" -> List(
               Map("name" -> "ok-task", "params" ->
-                Map("alpha" -> 1, "mode" -> "fast", "note" -> "say \"hi\"\tthen\u0001")),
+                Map("alpha" -> 1, "mode" -> "fast", "note" -> "say \"hi\"\tthen\u0001",
+                  "cols" -> List("a", "b"),
+                  "param_grid" -> Map("regParam" -> List(0.0, 0.1), "elasticNetParam" -> List("0.0")))),
               Map("name" -> "bad-task"))))))),
       "log_catalog" -> Map("tracking" -> Map("path" -> log)))
     val ctx = Context(cfg, null)
     graft.pipeline.Jobs.register("tjob", "ok-task") { p =>
-      p.int("alpha", 0); p.str("mode", "slow"); p.str("note", "")
+      p.int("alpha", 0); p.str("mode", "slow"); p.str("note", ""); p.strs("cols", Nil)
+      p.opt("param_grid", "a mapping") { case m: Map[_, _] => m }
       _ => ()
     }
     graft.pipeline.Jobs.register("tjob", "bad-task")(_ => _ => throw new RuntimeException("boom"))
@@ -54,6 +57,12 @@ class ConfigJobsSpec extends AnyFunSuite {
     // a quote, a tab and a raw control char all survive as valid JSON
     val parsed = new com.fasterxml.jackson.databind.ObjectMapper().readTree(lines.get(0))
     assert(parsed.get("params").get("note").asText() == "say \"hi\"\tthen\u0001")
+    // list and map params are JSON arrays and objects, not Scala toString text
+    val cols = parsed.get("params").get("cols")
+    assert(cols.isArray && cols.size() == 2 && cols.get(1).asText() == "b", cols.toString)
+    val grid = parsed.get("params").get("param_grid")
+    assert(grid.isObject && grid.get("regParam").isArray && grid.get("regParam").get(1).asDouble() == 0.1,
+      grid.toString)
   }
 
   test("data-cleaning then feature-engineering run the shipped catalog on the testdata") {
