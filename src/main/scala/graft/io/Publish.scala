@@ -9,10 +9,10 @@ import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
 /** The publish protocols behind every in-place write: compaction
   * ([[Compaction]]), index resharding
   * ([[graft.similarity.AnnIndex.reshardIvf]]), the incremental-state fold
-  * ([[graft.dp.IncrementalAgg.foldStateDir]]) and the shard exports
-  * ([[TfRecord]], [[WebDataset]], [[Warc]]). Every `FileSystem.rename` in
-  * the library lives here, each one CHECKED: Hadoop reports most rename
-  * failures by returning false, not by throwing.
+  * ([[graft.dp.IncrementalAgg.foldStateDir]]), the shard exports
+  * ([[TfRecord]], [[WebDataset]], [[Warc]]) and the derived fixtures.
+  * Every rename in the library lives here, each one CHECKED: Hadoop
+  * reports most rename failures by returning false, not by throwing.
   *
   * Directory swap ([[recover]] then [[swap]]): the new copy is written to
   * a `staged` sibling of the `live` directory, then published as (live →
@@ -31,8 +31,54 @@ import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
   * directory inside the export directory, and only after the job succeeds
   * are the old shards deleted and the staged ones renamed in. A re-export
   * therefore replaces the old shards, and a job that reads the directory
-  * it re-exports to still sees its input while it runs. */
+  * it re-exports to still sees its input while it runs.
+  *
+  * Write-once publish ([[once]]), for every derived fixture (the query
+  * fixtures under `/tmp/graft_io`, the multi-step ANN fixture indexes,
+  * ScaleBench's warc and clustered corpora): a `dir` holding `_STAGED`
+  * is used as it is. Otherwise the fixture is built into a hidden
+  * sibling, marked `_STAGED` there and moved to `dir` in one atomic move,
+  * so `dir` is either a complete marked copy or absent. A failed move
+  * onto a marked `dir` lost a race and uses the winner's copy; a `dir`
+  * without the marker is a crashed build's leftover, deleted before one
+  * more move. The move is `Files.move(ATOMIC_MOVE)`, not
+  * `FileSystem.rename`: on the local file system Hadoop's rename onto an
+  * existing directory returns true and moves the source INSIDE it, so a
+  * lost race would nest a second copy silently, while the atomic move
+  * refuses a non-empty target with a `FileSystemException`. */
 object Publish {
+
+  private val StagedMarker = "_STAGED"
+
+  /** The local directory `dir`, built once by `build` under the
+    * write-once protocol above. `build` is handed the hidden sibling
+    * (`.<name>.staging-<uuid>`), which it may create or fill; a `build`
+    * that throws is rethrown, and the sibling never outlives the call. */
+  def once(dir: String)(build: String => Unit): String = {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    val target = Paths.get(dir).toAbsolutePath
+    def staged = Files.exists(target.resolve(StagedMarker))
+    if (!staged) {
+      val staging = target.resolveSibling(
+        s".${target.getFileName}.staging-${java.util.UUID.randomUUID().toString.take(8)}")
+      def delete(p: java.nio.file.Path): Unit =
+        org.apache.commons.io.FileUtils.deleteQuietly(p.toFile)
+      def publish(retry: Boolean): Unit =
+        try Files.move(staging, target, StandardCopyOption.ATOMIC_MOVE)
+        catch {
+          case _: java.io.IOException if staged => () // lost the race
+          case _: java.io.IOException if retry => // a crashed build's leftover
+            delete(target); publish(retry = false)
+        }
+      try {
+        build(staging.toString)
+        Files.createDirectories(staging)
+        Files.createFile(staging.resolve(StagedMarker))
+        publish(retry = true)
+      } finally delete(staging)
+    }
+    dir
+  }
 
   private def fsOf(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)

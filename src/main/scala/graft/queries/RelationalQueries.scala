@@ -18,13 +18,12 @@ object RelationalQueries {
     * original, so any read-path drift (quoting, schema inference, nulls)
     * fails the hash compare. */
   private def textRoundTrip(s: SparkSession, dir: String, fmt: String): DataFrame = {
-    val tmp = s"/tmp/graft_io/${dir.replaceAll("[^A-Za-z0-9]", "_")}/nation_$fmt"
-    // write the fixture once per sf dir (it is deterministic): repeated
-    // bench/verify executions then time the READ path, and a concurrent
-    // run can't overwrite the files another session is scanning
-    if (!new java.io.File(s"$tmp/_SUCCESS").exists()) {
+    // the fixture is deterministic, so it is written once per sf dir by
+    // Publish.once: repeated bench/verify executions time the READ path,
+    // and the published dir is never rewritten under a running scan
+    val tmp = graft.io.Publish.once(fixtureDir(dir, s"nation_$fmt")) { out =>
       t(s, dir, "nation").coalesce(1).write.mode("overwrite")
-        .option("header", "true").format(fmt).save(tmp)
+        .option("header", "true").format(fmt).save(out)
     }
     graft.io.Tables.readData(s, Seq(tmp), fmt)
       .select(

@@ -29,6 +29,12 @@ object Support {
   def t(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
 
+  /** Where the derived fixture `name` of the sf dir `dir` is staged, one
+    * directory per sf dir under `/tmp/graft_io` (built by
+    * [[graft.io.Publish.once]]). */
+  def fixtureDir(dir: String, name: String): String =
+    s"/tmp/graft_io/${dir.replaceAll("[^A-Za-z0-9]", "_")}/$name"
+
   /** The events table with `ts` as a microsecond TimestampType, whatever
     * its physical parquet type (see `Tables.eventTime`). */
   def events(s: SparkSession, dir: String): DataFrame =

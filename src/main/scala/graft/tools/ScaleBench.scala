@@ -170,14 +170,15 @@ object ScaleBench {
         "doc_id", "text", groupCol = Some("lang"))
     })
 
-  /** Stage the scaled corpus as WARC files (idempotent per dir): one
-    * warc per ~5000 docs, so the FILE count scales with the corpus and
-    * the sf1 → sf10 step measures record-streaming at ~10x files. */
+  /** The scaled corpus as WARC files, staged once per dir by
+    * [[graft.io.Publish.once]]: one warc per ~5000 docs, so the FILE
+    * count scales with the corpus and the sf1 → sf10 step measures
+    * record-streaming at ~10x files. */
   private def ensureWarc(s: SparkSession, dir: String): String = {
     val key = java.security.MessageDigest.getInstance("MD5")
       .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    val out = s"${System.getProperty("java.io.tmpdir")}/graft_scale_warc_$key"
-    if (!new java.io.File(s"$out/_STAGED").exists()) {
+    graft.io.Publish.once(
+        s"${System.getProperty("java.io.tmpdir")}/graft_scale_warc_$key") { out =>
       val docs = s.read.parquet(s"$dir/documents.parquet")
         .filter(length(trim(col("text"))) > 0)
       val nFiles = math.max(4, (docs.count() / 5000).toInt)
@@ -190,9 +191,7 @@ object ScaleBench {
           lit("</p></body></html>")), "UTF-8").as("payload"))
         .repartition(nFiles)
       graft.io.Warc.writeWarc(frame, out, "uri", "ts", "rid", "mime", "payload")
-      new java.io.File(s"$out/_STAGED").createNewFile()
     }
-    out
   }
 
   /** The `r14-decade` suite: sf1 → sf10 for the round-13 heavy families.
@@ -296,13 +295,8 @@ object ScaleBench {
     * the two-level fit keeps the larger nlist affordable. */
   private def capLift(spark: SparkSession): Unit = {
     import graft.similarity.Similarity
-    val dir = "/tmp/graft_scale_caplift_40m"
-    if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
-      System.err.println("[scalebench] staging the 40M clustered corpus (one-off)")
-      Recall.clusteredCorpus(spark, n = 40000000L, dims = 16,
-          clusters = 4096, noise = 1.0)
-        .write.mode("overwrite").parquet(dir)
-    }
+    val dir = clusteredCorpusDir(spark, "/tmp/graft_scale_caplift_40m",
+      n = 40000000L, dims = 16, clusters = 4096)
     val full = spark.read.parquet(dir)
     val queries = full.filter(col("vec_id") < 50)
     for ((sfName, nRows) <- Seq("n20m" -> 20000000L, "n40m" -> 40000000L)) {
@@ -383,13 +377,8 @@ object ScaleBench {
     * brackets the default. */
   private def capRecall(spark: SparkSession): Unit = {
     import graft.similarity.Similarity
-    val dir = "/tmp/graft_scale_caprecall_40m_d32c256"
-    if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
-      System.err.println("[scalebench] staging the 40M dims-32 clustered corpus (one-off)")
-      Recall.clusteredCorpus(spark, n = 40000000L, dims = 32,
-          clusters = 256, noise = 1.0)
-        .write.mode("overwrite").parquet(dir)
-    }
+    val dir = clusteredCorpusDir(spark, "/tmp/graft_scale_caprecall_40m_d32c256",
+      n = 40000000L, dims = 32, clusters = 256)
     val full = spark.read.parquet(dir)
     val queries = full.filter(col("vec_id") < Recall.MinRecallQueries.toLong)
     val nQ = Recall.MinRecallQueries
@@ -445,13 +434,8 @@ object ScaleBench {
     * re-measured here. */
   private def shardFit(spark: SparkSession): Unit = {
     import graft.similarity.AnnIndex
-    val dir = "/tmp/graft_scale_caplift_40m"
-    if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
-      System.err.println("[scalebench] staging the 40M clustered corpus (one-off)")
-      Recall.clusteredCorpus(spark, n = 40000000L, dims = 16,
-          clusters = 4096, noise = 1.0)
-        .write.mode("overwrite").parquet(dir)
-    }
+    val dir = clusteredCorpusDir(spark, "/tmp/graft_scale_caplift_40m",
+      n = 40000000L, dims = 16, clusters = 4096)
     val corpus = spark.read.parquet(dir).filter(col("vec_id") < 20000000L)
     val queries = spark.read.parquet(dir).filter(col("vec_id") < 20)
     for ((label, nShards) <- Seq("single" -> 1, "sharded_4" -> 4)) {
@@ -652,17 +636,21 @@ object ScaleBench {
   }
 
   /** The 1.12M-vector clustered corpus (16 dims, 1024 clusters) the index
-    * probes share, staged once under /tmp; returns its directory. */
-  private def stagedCorpus(spark: SparkSession): String = {
-    val dir = "/tmp/graft_compaction_corpus"
-    if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
-      System.err.println("[scalebench] staging the 1.12M clustered corpus (one-off)")
-      Recall.clusteredCorpus(spark, n = 1120000L, dims = 16,
-          clusters = 1024, noise = 1.0)
-        .write.mode("overwrite").parquet(dir)
+    * probes share; returns its directory. */
+  private def stagedCorpus(spark: SparkSession): String =
+    clusteredCorpusDir(spark, "/tmp/graft_compaction_corpus",
+      n = 1120000L, dims = 16, clusters = 1024)
+
+  /** `dir`, holding the n-vector clustered corpus (noise 1.0) as parquet,
+    * staged once by [[graft.io.Publish.once]]. */
+  private def clusteredCorpusDir(spark: SparkSession, dir: String, n: Long,
+      dims: Int, clusters: Int): String =
+    graft.io.Publish.once(dir) { out =>
+      System.err.println(
+        s"[scalebench] staging the $n-vector dims-$dims clustered corpus at $dir (one-off)")
+      Recall.clusteredCorpus(spark, n, dims, clusters, noise = 1.0)
+        .write.mode("overwrite").parquet(out)
     }
-    dir
-  }
 
   /** `append-probe`: the r18 append-assignment fix measured at
     * nlist = 4096 (the scale the local bench's tiny fixture indexes
@@ -797,13 +785,8 @@ object ScaleBench {
   private def shardSweep(spark: SparkSession, counts: Seq[Int]): Unit = {
     import graft.similarity.{AnnIndex, Similarity}
     import spark.implicits._
-    val dir = "/tmp/graft_scale_caprecall_40m_d32c256"
-    if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
-      System.err.println("[scalebench] staging the 40M dims-32 clustered corpus (one-off)")
-      Recall.clusteredCorpus(spark, n = 40000000L, dims = 32,
-          clusters = 256, noise = 1.0)
-        .write.mode("overwrite").parquet(dir)
-    }
+    val dir = clusteredCorpusDir(spark, "/tmp/graft_scale_caprecall_40m_d32c256",
+      n = 40000000L, dims = 32, clusters = 256)
     val full = spark.read.parquet(dir)
     val nRows = 20000000L
     val corpus = full.filter(col("vec_id") < nRows)
@@ -885,16 +868,11 @@ object ScaleBench {
     * computed from the persisted layout (probed-cell occupancy under the
     * per-shard auto-nprobe policy — the bytes driver a search pays), and
     * the search latency; the decade slope of both closes the probe.
-    * Corpus and indexes are staged one-off behind _SUCCESS markers. */
+    * The corpus and indexes are staged one-off. */
   private def pqShardedDecade(spark: SparkSession): Unit = {
     import graft.similarity.{AnnIndex, Similarity}
-    val dir = "/tmp/graft_scale_caprecall_40m_d32c256"
-    if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
-      System.err.println("[scalebench] staging the 40M dims-32 clustered corpus (one-off)")
-      Recall.clusteredCorpus(spark, n = 40000000L, dims = 32,
-          clusters = 256, noise = 1.0)
-        .write.mode("overwrite").parquet(dir)
-    }
+    val dir = clusteredCorpusDir(spark, "/tmp/graft_scale_caprecall_40m_d32c256",
+      n = 40000000L, dims = 32, clusters = 256)
     val full = spark.read.parquet(dir)
     val queries = full.filter(col("vec_id") < Recall.MinRecallQueries.toLong)
       .persist()

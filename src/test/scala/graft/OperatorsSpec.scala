@@ -1788,4 +1788,80 @@ class OperatorsSpec extends SparkSpec {
     foldStateDir(spark, statePath, batch3, "k", batchId = 3L) // replay: no-op
     assert(sumV == 7.0)
   }
+
+  /** Runs `body` on a fixture path in a fresh parent directory, with the
+    * parent's entries other than the fixture; deletes the parent after. */
+  private def withFixture(body: (String, () => Set[String]) => Unit): Unit = {
+    val parent = java.nio.file.Files.createTempDirectory("graft_once").toFile
+    try body(s"$parent/fixture", () => parent.list().toSet - "fixture")
+    finally org.apache.commons.io.FileUtils.deleteQuietly(parent)
+  }
+
+  private def entries(dir: String): Set[String] =
+    Option(new java.io.File(dir).list()).map(_.toSet).getOrElse(Set.empty)
+
+  private def writeFile(dir: String, name: String, text: String): Unit = {
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir, name), text.getBytes("UTF-8"))
+  }
+
+  test("Publish.once: a staged dir is returned without building") {
+    withFixture { (dir, _) =>
+      writeFile(dir, "_STAGED", "")
+      writeFile(dir, "data", "old")
+      assert(graft.io.Publish.once(dir)(_ => fail("build must not run")) == dir)
+      assert(entries(dir) == Set("_STAGED", "data"))
+    }
+  }
+
+  test("Publish.once: a dir with partial content and no marker is rebuilt") {
+    withFixture { (dir, siblings) =>
+      writeFile(dir, "partial", "half a build")
+      var builds = 0
+      assert(graft.io.Publish.once(dir) { out => builds += 1; writeFile(out, "data", "new") } == dir)
+      assert(builds == 1)
+      assert(entries(dir) == Set("_STAGED", "data"))
+      assert(siblings().isEmpty)
+    }
+  }
+
+  test("Publish.once: a failed build leaves no dir and no sibling; the next call builds") {
+    withFixture { (dir, siblings) =>
+      val err = intercept[IllegalStateException] {
+        graft.io.Publish.once(dir) { out =>
+          writeFile(out, "data", "half")
+          throw new IllegalStateException("build failed")
+        }
+      }
+      assert(err.getMessage == "build failed")
+      assert(!new java.io.File(dir).exists())
+      assert(siblings().isEmpty)
+      graft.io.Publish.once(dir)(out => writeFile(out, "data", "whole"))
+      assert(entries(dir) == Set("_STAGED", "data"))
+    }
+  }
+
+  test("Publish.once: two racing writers publish one copy, nothing nested, no sibling left") {
+    import java.util.concurrent.{CyclicBarrier, TimeUnit}
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    withFixture { (dir, siblings) =>
+      // both builds finish only after both writers are past the marker
+      // check, so both reach the publishing move
+      val bothBuilding = new CyclicBarrier(2)
+      val writers = Seq("a", "b").map { who =>
+        Future(graft.io.Publish.once(dir) { out =>
+          writeFile(out, "who", who)
+          bothBuilding.await(60, TimeUnit.SECONDS)
+        })
+      }
+      assert(writers.map(Await.result(_, 2.minutes)) == Seq(dir, dir))
+      assert(entries(dir) == Set("_STAGED", "who"))
+      val winner = new String(
+        java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(dir, "who")), "UTF-8")
+      assert(Set("a", "b").contains(winner))
+      assert(siblings().isEmpty)
+    }
+  }
 }
